@@ -118,14 +118,11 @@ def _get_spark(cpus: int):
         app_name="bench",
         master=f"local[{cpus}]",
         shuffle_partitions=max(cpus, 8),
-        # generous heap: the full-pass caches a multi-GB wave slice; an
-        # undersized heap turns the bench into a GC benchmark. Finer splits:
-        # the local fixtures are ~20 MB files — at the 128m default they pack
-        # into too few scan tasks to feed 32 cores (measured 1.7x slowdown).
-        extra_conf={
-            "spark.driver.memory": os.environ.get("SPARK_DRIVER_MEMORY", "16g"),
-            "spark.sql.files.maxPartitionBytes": "48m",
-        },
+        # Driver heap comes from get_spark (SPARK_DRIVER_MEMORY, default 8g).
+        # Finer splits: the local fixtures are ~20 MB files — at the 128m
+        # default they pack into too few scan tasks to feed 32 cores
+        # (measured 1.7x slowdown).
+        extra_conf={"spark.sql.files.maxPartitionBytes": "48m"},
     )
 
 

@@ -54,7 +54,6 @@ def main(argv: list[str] | None = None) -> int:
     )
     ap.add_argument("--n-buckets", type=int, default=64, help="logical partition buckets")
     ap.add_argument("--n-waves", type=int, default=4, help="checkpoint waves per run")
-    ap.add_argument("--binning", choices=["native", "arrow"], default="native")
     ap.add_argument("--master", default=None, help="override spark master")
     ap.add_argument("--generate-rows", type=int, default=0,
                     help="local smoke: generate a fixture of N rows under --workdir")
@@ -108,9 +107,7 @@ def main(argv: list[str] | None = None) -> int:
         if args.baseline:
             baseline.save(args.baseline)
 
-    cfg = SuiteConfig(
-        n_partition_buckets=args.n_buckets, binning_strategy=args.binning
-    )
+    cfg = SuiteConfig(n_partition_buckets=args.n_buckets)
     suite = ValidationSuite(baseline, cfg)
 
     manifest = None

@@ -2,18 +2,16 @@
 
 All variants are shuffle-shaped for 100 TB: candidate generation is always a
 key-partitioned groupBy/join (never an all-pairs cross product), and hashing
-stays JVM-side (`xxhash64`, `sha2`, `hash`) except where bit-level packing
-needs numpy (Arrow-batched, never per-row Python).
+stays JVM-side (`xxhash64`, `sha2`, `md5`, `hash`) — no Python UDFs.
 
 * exact_duplicates / dedup_exact — hash-groupBy on content digest.
 * minhash_lsh_candidates — shingle -> K minhashes -> B bands -> bucket join.
   Shuffle volume is O(rows x B), candidates only within equal band-buckets.
 * simhash64_native — 64-bit SimHash entirely JVM-side (md5 token hashes —
-  engine-portable, so DuckDB oracles reproduce signatures bit-for-bit);
-  simhash64 — the same algorithm as an Arrow-vectorized pandas UDF (FNV-1a),
-  kept as the §2.10 vectorized-UDF surface. Near-dup candidates come from
-  8 DISJOINT 8-bit bands (pigeonhole: any pair within Hamming bands-1
-  shares a band -> candidate generation is COMPLETE for thresholds <= 7).
+  engine-portable, so DuckDB oracles reproduce signatures bit-for-bit).
+  Near-dup candidates come from 8 DISJOINT 8-bit bands (pigeonhole: any
+  pair within Hamming bands-1 shares a band -> candidate generation is
+  COMPLETE for thresholds <= 7).
 * ngram_jaccard — exact Jaccard on n-gram sets for a candidate pair set
   (verification stage after LSH).
 * prefix_filter_jaccard_join — EXACT n-gram Jaccard self-join via prefix
@@ -26,11 +24,8 @@ cluster-assignment stage, and dedup_exact/keep-min picks survivors.
 
 from __future__ import annotations
 
-import numpy as np
-import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.functions import pandas_udf
 
 
 def content_digest(col: Column) -> Column:
@@ -455,54 +450,6 @@ def containment_prefix_join(
         )
     )
     return verified.where(F.col("containment") >= threshold)
-
-
-def _fnv1a64(data: bytes) -> int:
-    h = 0xCBF29CE484222325
-    for byte in data:
-        h ^= byte
-        h = (h * 0x100000001B3) & 0xFFFFFFFFFFFFFFFF
-    return h
-
-
-def _make_simhash_udf():
-    """Vectorized 64-bit SimHash over token arrays (Arrow batches).
-
-    Per batch: hash each token (stable FNV-1a — deterministic across runs and
-    workers, unlike Python's salted hash()), vote bits, pack to int64.
-    Built lazily so importing this module needs no active SparkSession.
-    """
-
-    @pandas_udf("long")
-    def _simhash64(tokens: pd.Series) -> pd.Series:
-        out = np.zeros(len(tokens), dtype=np.int64)
-        for i, toks in enumerate(tokens):
-            if toks is None or len(toks) == 0:
-                out[i] = 0
-                continue
-            hs = np.array(
-                [_fnv1a64(t.encode("utf-8")) for t in toks], dtype=np.uint64
-            )
-            bits = (
-                (hs[:, None] >> np.arange(64, dtype=np.uint64)) & np.uint64(1)
-            ).astype(np.int64)
-            votes = (2 * bits - 1).sum(axis=0)
-            packed = np.uint64(0)
-            for b in np.nonzero(votes > 0)[0]:
-                packed |= np.uint64(1) << np.uint64(b)
-            out[i] = np.int64(packed)
-        return pd.Series(out)
-
-    return _simhash64
-
-
-def simhash64(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
-    """(id, simhash) — deterministic FNV-1a token hashing, stable across
-    runs/workers. SimHash complements MinHash: Hamming-space near-dup ids."""
-    toks = F.split(F.trim(F.lower(F.col(text_col))), "\\s+")
-    return df.select(
-        F.col(id_col).alias("id"), _make_simhash_udf()(toks).alias("simhash")
-    )
 
 
 _POW2_64 = [1 << b for b in range(63)] + [-(1 << 63)]  # two's-complement bit 63

@@ -9,13 +9,15 @@ the source-code table:
 * uniqueness on key columns: hash-partitioned ``groupBy(...).count()`` —
   Spark's hash shuffle IS the hash partitioning; map-side partial counts make
   the shuffle proportional to distinct keys, not rows.
-* referential (fact.commit -> dim.commit): LEFT ANTI join. Broadcast when the
-  dim is small (explicit ``F.broadcast``); otherwise shuffled anti-join with
-  AQE skew-split handling the planted mega-repo.
-* null / not-empty / range / regex / z-score row checks: pure Column
-  predicates — stay in whole-stage codegen, violations are a filter.
-* sha256 invariant: ``sha2(content, 256) == content_sha256`` per row at any
-  stage (north_rule per-row invariant).
+* referential (fact.commit -> dim.commit): LEFT ANTI join. The distinct dim
+  keys are broadcast by default (explicit ``F.broadcast``); opting out gives
+  a shuffled anti-join with AQE skew-split handling the planted mega-repo.
+* row rules (not-null, not-empty, range, regex, z-score, the sha256
+  per-row invariant, ...): :class:`RowRule` Column predicates, all fused into
+  one scan by :func:`fused_row_violations` — they stay in whole-stage
+  codegen, and violations are a filter + explode.
+* contains / endswith string rules: standalone filters for the catalog's
+  string-rule query.
 
 All checks return violation DataFrames with a common shape so the suite can
 union them: (check, column, repo, path, commit, detail).
@@ -84,18 +86,17 @@ def referential_violations(
     dim: DataFrame,
     fact_key: str = "commit",
     dim_key: str = "commit",
-    broadcast_dim: bool | None = None,
-    broadcast_threshold_rows: int = 50_000_000,
+    broadcast_dim: bool = True,
 ) -> DataFrame:
     """Fact rows whose key is absent from the dim (LEFT ANTI).
 
-    ``broadcast_dim=None`` -> auto: broadcast the DISTINCT dim keys if the dim
-    is plausibly small (the distinct-key projection of even a large commit dim
-    is far smaller than the dim itself). With ``False``, a shuffled anti-join
-    is used and AQE's skew-join splitting covers skewed fact keys.
+    ``broadcast_dim=True`` (default) broadcasts the DISTINCT dim keys — the
+    distinct-key projection of even a large commit dim is far smaller than
+    the dim itself. With ``False``, a shuffled anti-join is used and AQE's
+    skew-join splitting covers skewed fact keys.
     """
     dim_keys = dim.select(F.col(dim_key).alias(fact_key)).distinct()
-    if broadcast_dim is True or broadcast_dim is None:
+    if broadcast_dim:
         dim_keys = F.broadcast(dim_keys)
     missing = facts.join(dim_keys, on=fact_key, how="left_anti")
     return _shape(
@@ -103,41 +104,6 @@ def referential_violations(
         "referential",
         fact_key,
         F.concat(F.lit("dangling "), F.col(fact_key)),
-    )
-
-
-def null_violations(df: DataFrame, column: str) -> DataFrame:
-    return _shape(
-        df.where(F.col(column).isNull()), "not_null", column, F.lit("null value")
-    )
-
-
-def not_empty_violations(df: DataFrame, column: str) -> DataFrame:
-    return _shape(
-        df.where(F.col(column).isNotNull() & (F.length(column) == 0)),
-        "not_empty",
-        column,
-        F.lit("empty value"),
-    )
-
-
-def range_violations(
-    df: DataFrame,
-    column: str,
-    min_value: float | None = None,
-    max_value: float | None = None,
-) -> DataFrame:
-    """Value-range constraint (generalizes schemas.py ge/le validators)."""
-    cond = F.lit(False)
-    if min_value is not None:
-        cond = cond | (F.col(column) < F.lit(min_value))
-    if max_value is not None:
-        cond = cond | (F.col(column) > F.lit(max_value))
-    return _shape(
-        df.where(F.col(column).isNotNull() & cond),
-        "range",
-        column,
-        F.concat(F.lit("value="), F.col(column).cast("string")),
     )
 
 
@@ -175,55 +141,6 @@ def endswith_violations(
     )
 
 
-def regex_violations(df: DataFrame, column: str, pattern: str) -> DataFrame:
-    """Rows NOT matching the pattern (e.g. commit ~ ^[0-9a-f]{40}$)."""
-    return _shape(
-        df.where(
-            F.col(column).isNotNull() & ~F.col(column).rlike(pattern)
-        ),
-        "regex",
-        column,
-        F.concat(F.lit("value="), F.col(column).cast("string")),
-    )
-
-
-def zscore_violations(
-    df: DataFrame,
-    column: str,
-    mean: float,
-    std: float,
-    threshold: float = 3.0,
-) -> DataFrame:
-    """|value - mean| / std > threshold, against FROZEN baseline stats
-    (reference: drift_detector.py:295-334 — z>3 warn, z>5 high severity)."""
-    if std <= 0:
-        return _shape(df.limit(0), "zscore", column, F.lit(""))
-    z = F.abs((F.col(column).cast("double") - F.lit(mean)) / F.lit(std))
-    sev = F.when(z > 5.0, F.lit("high")).otherwise(F.lit("medium"))
-    return _shape(
-        df.where(F.col(column).isNotNull() & (z > F.lit(threshold))),
-        "zscore",
-        column,
-        F.concat(F.lit("z="), F.round(z, 2), F.lit(" severity="), sev),
-    )
-
-
-def sha256_invariant_violations(
-    df: DataFrame, content_col: str = "content", sha_col: str = "content_sha256"
-) -> DataFrame:
-    """Per-row invariant: sha2(content,256) must equal the stored check column
-    at every stage (north_rule). Pure JVM expression — no Python hashing."""
-    return _shape(
-        df.where(
-            F.col(content_col).isNotNull()
-            & (F.sha2(F.col(content_col), 256) != F.col(sha_col))
-        ),
-        "sha256_invariant",
-        content_col,
-        F.concat(F.lit("expected="), F.col(sha_col)),
-    )
-
-
 class RowRule:
     """A row-level violation rule: (check, column, cond, detail). ``cond``
     true => the row violates. Used by :func:`fused_row_violations`."""
@@ -242,7 +159,7 @@ def fused_row_violations(df: DataFrame, rules: Sequence[RowRule]) -> DataFrame:
     of a cached slice — either way k traversals). Instead, build per row an
     array of violation structs (null for satisfied rules), drop the nulls,
     and explode: one projection + filter per scan, zero rows emitted for
-    clean rows, identical output to the per-check union. This is the scan
+    clean rows, one row per (row, violated rule). This is the scan
     shape that survives 100 TB — the input is read once regardless of how
     many row rules the suite carries.
     """

@@ -1,22 +1,21 @@
 """Distribution-drift checks: PSI + KS per (partition, feature) vs a baseline.
 
 Spark-first restructuring of the reference's ``detect_drift`` loop
-(drift_detector.py:236-293): instead of N per-feature pandas passes, the
-engine builds ONE plan per feature *kind* —
+(drift_detector.py:236-293): instead of N per-feature pandas passes, every
+baseline feature — numerical, categorical and binary — compiles into ONE
+multi-aggregate job (:func:`fused_drift_verdicts`):
 
-  numerical:  bucket rows against frozen baseline edges (histogram.py) ->
-              groupBy(partition, bucket).count() -> dense count arrays ->
-              native psi_expr / ks_expr columns, plus current mean/std from
-              the same pass family.
-  categorical: groupBy(partition, value).count() over the frozen category
-              list -> dense arrays -> the same PSI/KS expressions, plus the
-              reference's proportion-difference test for binary-like columns
-              (drift_detector.py:203-225).
+  numerical:   bucket index against the frozen baseline edges (pd.cut
+               semantics, histogram.py) plus moment sums for mean/std;
+  categorical: the raw category value, densified over the frozen category
+               list after the shuffle (unknown values and NULLs drop out);
+  binary:      the reference's proportion-difference test
+               (drift_detector.py:203-225) from the same moment sums.
 
-Baseline count vectors are tiny literals (broadcast in the plan itself); the
-only full-data work is the scan + one shuffle keyed on (partition, bucket).
-PSI is always computed on MERGED histograms — never averaged across
-partitions (PSI does not decompose).
+Baseline count vectors ride a tiny broadcast spec table; the only full-data
+work is the scan + one shuffle keyed on (partition, feature, key). PSI is
+always computed on MERGED histograms — never averaged across partitions
+(PSI does not decompose).
 
 Verdict rows mirror the reference's report fields: psi, drift_detected
 (psi >= 0.2), drift_severity ladder, baseline/current mean + std,
@@ -25,16 +24,11 @@ mean_change_pct with the same NaN/zero guards (drift_detector.py:137-165).
 
 from __future__ import annotations
 
-from collections.abc import Sequence
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from mlops_drift_detection_spark.baseline import BaselineSnapshot
-from mlops_drift_detection_spark.operators.histogram import (
-    bucket_column,
-    categorical_counts,
-)
+from mlops_drift_detection_spark.operators.histogram import bucket_expr_native
 from mlops_drift_detection_spark.operators.psi import (
     PSI_ALARM_THRESHOLD,
     ks_expr,
@@ -51,323 +45,15 @@ VERDICT_SCHEMA = (
 
 # Sentinel for NULL category values inside the fused (feature, key) explode.
 # Never read back: the dense count vector indexes only the frozen category
-# list, so the sentinel (like any unknown category) drops out exactly as
-# categorical_counts' isin filter drops it.
+# list, so the sentinel drops out like any unknown category.
 _NULL_KEY = "\x00__null__"
 _BIN_KEY = "__bin__"
-
-
-def _finalize(
-    grouped: DataFrame,
-    feature: str,
-    kind: str,
-    baseline_counts: list[float],
-    baseline_mean: float,
-    baseline_std: float,
-    psi_threshold: float,
-) -> DataFrame:
-    expected = F.array(*[F.lit(float(c)) for c in baseline_counts])
-    psi = psi_expr(expected, F.col("counts"))
-    ks = ks_expr(expected, F.col("counts"))
-    cur_mean = F.coalesce(F.nanvl(F.col("cur_mean"), F.lit(0.0)), F.lit(0.0))
-    cur_std = F.coalesce(F.nanvl(F.col("cur_std"), F.lit(0.0)), F.lit(0.0))
-    if baseline_mean != 0:
-        mcp = (cur_mean - F.lit(baseline_mean)) / F.lit(baseline_mean) * 100
-        mcp = F.when(F.isnan(mcp) | (F.abs(mcp) == float("inf")), 0.0).otherwise(mcp)
-    else:
-        mcp = F.lit(0.0)  # reference: drift_detector.py:151
-    return grouped.select(
-        F.col("partition").cast("string").alias("partition"),
-        F.lit(feature).alias("feature"),
-        F.lit(kind).alias("kind"),
-        F.round(psi, 4).alias("psi"),
-        F.round(ks, 4).alias("ks"),
-        (psi >= F.lit(psi_threshold)).alias("drift_detected"),
-        psi_severity_expr(psi).alias("drift_severity"),
-        F.round(F.lit(baseline_mean), 4).alias("baseline_mean"),
-        F.round(cur_mean, 4).alias("current_mean"),
-        F.round(mcp, 2).alias("mean_change_pct"),
-        F.round(F.lit(baseline_std), 4).alias("baseline_std"),
-        F.round(cur_std, 4).alias("current_std"),
-        F.col("n_samples").cast("long").alias("n_samples"),
-    )
-
-
-def numerical_drift(
-    df: DataFrame,
-    value_col: str,
-    baseline: BaselineSnapshot,
-    feature: str | None = None,
-    partition_col: str | None = None,
-    strategy: str = "native",
-    psi_threshold: float = PSI_ALARM_THRESHOLD,
-) -> DataFrame:
-    """Per-partition numerical drift verdicts for one column.
-
-    One shuffle on (partition, bucket) with map-side combine; histogram and
-    moment aggregation share the same shuffle via a bucket+value projection.
-    """
-    feature = feature or value_col
-    nb = baseline.numerical[feature]
-    edges = nb.bins
-    n_bins = max(len(edges) - 1, 1)
-    part = (
-        F.col(partition_col).cast("string")
-        if partition_col
-        else F.lit("__all__")
-    )
-    projected = df.select(
-        part.alias("partition"),
-        F.col(value_col).cast("double").alias("__v"),
-        bucket_column(F.col(value_col).cast("double"), edges, strategy).alias("__b"),
-    )
-    per_bucket = projected.groupBy("partition", "__b").agg(
-        F.count(F.lit(1)).alias("__cnt"),
-        F.count("__v").alias("__cnt_val"),
-        F.sum("__v").alias("__sum"),
-        F.sum(F.col("__v") * F.col("__v")).alias("__sum2"),
-    )
-    # merge buckets per partition: dense counts from in-range buckets only;
-    # moments over non-null values (pandas .mean()/.std() skip NaN —
-    # drift_detector.py:137-138); n_samples counts every row of the batch
-    # (len(production_data), drift_detector.py:284).
-    grouped = per_bucket.groupBy("partition").agg(
-        F.map_from_arrays(
-            F.collect_list(F.coalesce(F.col("__b"), F.lit(-1))),
-            F.collect_list("__cnt"),
-        ).alias("__m"),
-        F.sum("__cnt").alias("__n_all"),
-        F.sum("__cnt_val").alias("__n_val"),
-        F.sum("__sum").alias("__tsum"),
-        F.sum("__sum2").alias("__tsum2"),
-    )
-    dense = F.transform(
-        F.sequence(F.lit(0), F.lit(n_bins - 1)),
-        lambda i: F.coalesce(F.col("__m")[i].cast("double"), F.lit(0.0)),
-    )
-    n = F.col("__n_val").cast("double")
-    mean = F.when(n > 0, F.col("__tsum") / n).otherwise(F.lit(0.0))
-    var = (F.col("__tsum2") - F.col("__tsum") * F.col("__tsum") / n) / (n - 1)
-    std = F.when(n > 1, F.sqrt(F.greatest(var, F.lit(0.0)))).otherwise(F.lit(0.0))
-    grouped = grouped.select(
-        "partition",
-        dense.alias("counts"),
-        mean.alias("cur_mean"),
-        std.alias("cur_std"),
-        F.col("__n_all").alias("n_samples"),
-    )
-    return _finalize(
-        grouped, feature, "numerical", nb.counts, nb.mean, nb.std, psi_threshold
-    )
-
-
-def categorical_drift(
-    df: DataFrame,
-    value_col: str,
-    baseline: BaselineSnapshot,
-    feature: str | None = None,
-    partition_col: str | None = None,
-    psi_threshold: float = PSI_ALARM_THRESHOLD,
-) -> DataFrame:
-    """Per-partition categorical drift: PSI/KS over the frozen category list.
-
-    mean/std fields carry the top-category proportion (the generalization of
-    the reference's binary ``proportion_positive``, drift_detector.py:197-215).
-    """
-    feature = feature or value_col
-    cb = baseline.categorical[feature]
-    part_cols = [partition_col] if partition_col else []
-    counts = categorical_counts(df, value_col, cb.categories, part_cols)
-    if partition_col:
-        counts = counts.withColumnRenamed(partition_col, "partition")
-    else:
-        counts = counts.withColumn("partition", F.lit("__all__"))
-    total = F.aggregate(F.col("counts"), F.lit(0.0), lambda a, x: a + x)
-    top_prop = F.when(total > 0, F.col("counts")[0] / total).otherwise(F.lit(0.0))
-    baseline_top_prop = cb.proportions[0] if cb.proportions else 0.0
-    grouped = counts.select(
-        "partition",
-        "counts",
-        top_prop.alias("cur_mean"),
-        F.lit(0.0).alias("cur_std"),
-        total.cast("long").alias("n_samples"),
-    )
-    return _finalize(
-        grouped, feature, "categorical", cb.counts, baseline_top_prop, 0.0,
-        psi_threshold,
-    )
-
-
-def proportion_drift(
-    df: DataFrame,
-    value_col: str,
-    baseline_proportion: float,
-    feature: str | None = None,
-    partition_col: str | None = None,
-    diff_threshold: float = 0.1,
-) -> DataFrame:
-    """The reference's exact binary proportion test (drift_detector.py:203-225):
-    drift iff |current_prop - baseline_prop| >= 0.1; severity >=0.2 high,
-    >=0.1 medium, else low. ``value_col`` must be 0/1-valued."""
-    feature = feature or value_col
-    part = (
-        F.col(partition_col).cast("string") if partition_col else F.lit("__all__")
-    )
-    agg = df.select(part.alias("partition"), F.col(value_col).cast("double").alias("v")).groupBy(
-        "partition"
-    ).agg(F.avg("v").alias("cur_prop"), F.count(F.lit(1)).alias("n_samples"))
-    diff = F.abs(F.col("cur_prop") - F.lit(baseline_proportion))
-    sev = (
-        F.when(diff >= 0.2, "high").when(diff >= 0.1, "medium").otherwise("low")
-    )
-    return agg.select(
-        F.col("partition").cast("string").alias("partition"),
-        F.lit(feature).alias("feature"),
-        F.lit("categorical_binary").alias("kind"),
-        F.round(diff, 4).alias("psi"),  # proportion_difference in psi slot
-        F.lit(None).cast("double").alias("ks"),
-        (diff >= F.lit(diff_threshold)).alias("drift_detected"),
-        sev.alias("drift_severity"),
-        F.round(F.lit(baseline_proportion), 4).alias("baseline_mean"),
-        F.round(F.col("cur_prop"), 4).alias("current_mean"),
-        F.lit(0.0).alias("mean_change_pct"),
-        F.lit(0.0).alias("baseline_std"),
-        F.lit(0.0).alias("current_std"),
-        F.col("n_samples").cast("long").alias("n_samples"),
-    )
-
-
-def fused_two_feature_drift(
-    df: DataFrame,
-    num_col: str,
-    cat_col: str,
-    baseline: BaselineSnapshot,
-    partition_col: str | None = None,
-    strategy: str = "native",
-    psi_threshold: float = PSI_ALARM_THRESHOLD,
-) -> DataFrame:
-    """numerical_drift(num_col) + categorical_drift(cat_col) from ONE scan.
-
-    Both features' needs are carried by a single micro-aggregate keyed on
-    (partition, bucket, category) — O(partitions x bins x categories) rows.
-    The two marginals then re-aggregate that micro-table; because both
-    branches consume the IDENTICAL shuffle, Spark's ReuseExchange runs the
-    scan + partial aggregation once (verified in tests). Output rows are
-    bit-identical to the two separate operators — this is purely a physical
-    fusion: at 100 TB it removes one full scan + one full-data shuffle from
-    every validation wave.
-    """
-    nb = baseline.numerical[num_col]
-    cb = baseline.categorical[cat_col]
-    edges = nb.bins
-    n_bins = max(len(edges) - 1, 1)
-    part = (
-        F.col(partition_col).cast("string") if partition_col else F.lit("__all__")
-    )
-    # null category -> sentinel IN THE PROJECTION so no branch needs its own
-    # null filter; the dense array below reads only the frozen categories,
-    # so sentinel and unknown keys drop out exactly like categorical_counts'
-    # isin filter.
-    proj = df.select(
-        part.alias("partition"),
-        bucket_column(F.col(num_col).cast("double"), edges, strategy).alias("__b"),
-        F.coalesce(F.col(cat_col), F.lit("__null__")).alias("__cat"),
-        F.col(num_col).cast("double").alias("__v"),
-    )
-    micro = proj.groupBy("partition", "__b", "__cat").agg(
-        F.count(F.lit(1)).alias("__cnt"),
-        F.count("__v").alias("__cnt_val"),
-        F.sum("__v").alias("__sum"),
-        F.sum(F.col("__v") * F.col("__v")).alias("__sum2"),
-    )
-    # Materialize the micro-table ONCE (lazy local checkpoint: computed on
-    # the first action, O(partitions x bins x categories) rows) and hang
-    # both marginals off it. Without this, per-branch column pruning makes
-    # the two exchange subplans non-identical, ReuseExchange cannot fire,
-    # and the input is scanned twice. Checkpoint blocks are freed by the
-    # ContextCleaner once the wave's DataFrames go out of scope.
-    micro = micro.localCheckpoint(eager=False)
-
-    # ---- numerical marginal (identical pipeline to numerical_drift) ----
-    per_bucket = micro.groupBy("partition", "__b").agg(
-        F.sum("__cnt").alias("__cnt"),
-        F.sum("__cnt_val").alias("__cnt_val"),
-        F.sum("__sum").alias("__sum"),
-        F.sum("__sum2").alias("__sum2"),
-    )
-    grouped = per_bucket.groupBy("partition").agg(
-        F.map_from_arrays(
-            F.collect_list(F.coalesce(F.col("__b"), F.lit(-1))),
-            F.collect_list("__cnt"),
-        ).alias("__m"),
-        F.sum("__cnt").alias("__n_all"),
-        F.sum("__cnt_val").alias("__n_val"),
-        F.sum("__sum").alias("__tsum"),
-        F.sum("__sum2").alias("__tsum2"),
-    )
-    dense = F.transform(
-        F.sequence(F.lit(0), F.lit(n_bins - 1)),
-        lambda i: F.coalesce(F.col("__m")[i].cast("double"), F.lit(0.0)),
-    )
-    n = F.col("__n_val").cast("double")
-    mean = F.when(n > 0, F.col("__tsum") / n).otherwise(F.lit(0.0))
-    var = (F.col("__tsum2") - F.col("__tsum") * F.col("__tsum") / n) / (n - 1)
-    std = F.when(n > 1, F.sqrt(F.greatest(var, F.lit(0.0)))).otherwise(F.lit(0.0))
-    num_grouped = grouped.select(
-        "partition",
-        dense.alias("counts"),
-        mean.alias("cur_mean"),
-        std.alias("cur_std"),
-        F.col("__n_all").alias("n_samples"),
-    )
-    num_verdicts = _finalize(
-        num_grouped, num_col, "numerical", nb.counts, nb.mean, nb.std, psi_threshold
-    )
-
-    # ---- categorical marginal (identical pipeline to categorical_drift) ----
-    cat_pairs = (
-        micro.groupBy("partition", "__cat")
-        .agg(F.sum("__cnt").alias("__ccnt"))
-        .groupBy("partition")
-        .agg(
-            F.map_from_arrays(
-                F.collect_list("__cat"), F.collect_list("__ccnt")
-            ).alias("__cm")
-        )
-    )
-    cat_dense = F.array(
-        *[
-            F.coalesce(F.col("__cm")[F.lit(c)].cast("double"), F.lit(0.0))
-            for c in cb.categories
-        ]
-    )
-    cat_counts = cat_pairs.select("partition", cat_dense.alias("counts"))
-    total = F.aggregate(F.col("counts"), F.lit(0.0), lambda a, x: a + x)
-    # a partition with rows but NO frozen-category hits emits no row from
-    # categorical_drift (the isin filter drops it before its groupBy) —
-    # mirror that so fusion stays bit-identical, not just value-close
-    cat_counts = cat_counts.where(total > 0)
-    top_prop = F.when(total > 0, F.col("counts")[0] / total).otherwise(F.lit(0.0))
-    baseline_top_prop = cb.proportions[0] if cb.proportions else 0.0
-    cat_grouped = cat_counts.select(
-        "partition",
-        "counts",
-        top_prop.alias("cur_mean"),
-        F.lit(0.0).alias("cur_std"),
-        total.cast("long").alias("n_samples"),
-    )
-    cat_verdicts = _finalize(
-        cat_grouped, cat_col, "categorical", cb.counts, baseline_top_prop, 0.0,
-        psi_threshold,
-    )
-    return num_verdicts.unionByName(cat_verdicts)
 
 
 def fused_drift_verdicts(
     df: DataFrame,
     baseline: BaselineSnapshot,
     partition_col: str | None = None,
-    strategy: str = "native",
     psi_threshold: float = PSI_ALARM_THRESHOLD,
     binary_diff_threshold: float = 0.1,
 ) -> DataFrame:
@@ -393,12 +79,11 @@ def fused_drift_verdicts(
          densifies the counts and computes PSI / KS / moments / verdict
          fields in a single kind-switched projection.
 
-    Output rows are exactly what the per-feature operators
-    (:func:`numerical_drift` / :func:`categorical_drift` /
-    :func:`proportion_drift`) produce — pytest asserts bit-identity — with
-    one deliberate divergence: a partition whose rows all miss a feature's
-    frozen category list emits NO categorical row here *and* none there
-    (the total>0 filter mirrors categorical_counts' isin drop).
+    A partition whose rows all miss a feature's frozen category list (or
+    are all NULL) emits NO row for that categorical feature: there is no
+    in-list count to compare. Numerical and binary features always emit a
+    row per partition. ``tests/test_drift.py`` checks every row against an
+    independent pandas/numpy mirror of these semantics.
 
     At 100 TB and 51 features this replaces 51 scans + 51 shuffles with one
     scan + one full-data shuffle; everything after step 2 is metadata-sized.
@@ -419,7 +104,7 @@ def fused_drift_verdicts(
             F.struct(
                 F.lit(feat).alias("f"),
                 F.coalesce(
-                    bucket_column(v, nb.bins, strategy).cast("string"), F.lit("-1")
+                    bucket_expr_native(v, nb.bins).cast("string"), F.lit("-1")
                 ).alias("k"),
                 v.alias("v"),
             )
@@ -557,61 +242,6 @@ def fused_drift_verdicts(
             "n_samples"
         ),
     )
-
-
-def auto_drift_verdicts(
-    df: DataFrame,
-    baseline: BaselineSnapshot,
-    partition_col: str | None = None,
-    strategy: str = "native",
-    psi_threshold: float = PSI_ALARM_THRESHOLD,
-    fused: bool = True,
-) -> DataFrame:
-    """Dispatch every baseline feature down its kind's path — numerical
-    (PSI/KS histogram), categorical (frozen category list) or binary
-    (reference's exact proportion test) — exactly as ``detect_drift``
-    dispatches on snapshot membership (drift_detector.py:264-267), with the
-    kind decided DATA-DRIVEN at baseline time (compute_baseline_auto).
-
-    ``fused=True`` (default) compiles ALL features into the single-scan
-    multi-agg job (:func:`fused_drift_verdicts`). ``fused=False`` keeps the
-    one-job-per-feature reference shape — N scans, only for verification
-    (the bit-identity pytest) and debugging."""
-    if fused:
-        return fused_drift_verdicts(
-            df,
-            baseline,
-            partition_col=partition_col,
-            strategy=strategy,
-            psi_threshold=psi_threshold,
-        )
-    parts: list[DataFrame] = []
-    for feat in baseline.numerical:
-        parts.append(
-            numerical_drift(
-                df, feat, baseline, partition_col=partition_col,
-                strategy=strategy, psi_threshold=psi_threshold,
-            )
-        )
-    for feat in baseline.categorical:
-        parts.append(
-            categorical_drift(
-                df, feat, baseline, partition_col=partition_col,
-                psi_threshold=psi_threshold,
-            )
-        )
-    for feat, b in baseline.binary.items():
-        parts.append(
-            proportion_drift(
-                df, feat, b.proportion_ones, partition_col=partition_col
-            )
-        )
-    if not parts:
-        raise ValueError("baseline has no features")
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionByName(p)
-    return out
 
 
 def drift_summary(verdicts: DataFrame) -> DataFrame:

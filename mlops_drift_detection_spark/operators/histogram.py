@@ -11,15 +11,9 @@ src/monitoring/baseline_calculator.py:84) at Spark scale:
 * bins with no data get count 0 (the reference zero-fills short vectors,
   drift_detector.py:123-126).
 
-Two bucketing strategies, identical output:
-
-* ``strategy="native"`` (default): a WHEN-chain Column expression. For the
-  10-bin PSI case this stays inside whole-stage codegen — the fastest path,
-  no Python in the loop.
-* ``strategy="arrow"``: vectorized ``np.searchsorted`` inside an
-  Arrow-batched pandas UDF (the north_star's named binning path). Same
-  semantics; useful when the edge list is large enough to make a WHEN-chain
-  unwieldy (hundreds+ of bins).
+Bucketing is a WHEN-chain Column expression (:func:`bucket_expr_native`):
+for the 10-bin PSI case it stays inside whole-stage codegen, with no Python
+in the loop.
 
 Aggregation is a plain ``groupBy(bucket).count()`` — map-side partial
 aggregation makes the shuffle O(groups x bins), independent of row count, so
@@ -31,10 +25,8 @@ from __future__ import annotations
 from collections.abc import Sequence
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.functions import pandas_udf
 
 
 def bucket_expr_native(col: Column, edges: Sequence[float]) -> Column:
@@ -48,37 +40,11 @@ def bucket_expr_native(col: Column, edges: Sequence[float]) -> Column:
     return expr.otherwise(F.lit(len(e) - 2)).cast("int")
 
 
-def make_bucket_udf(edges: Sequence[float]):
-    """Arrow-vectorized bucket index UDF with identical pd.cut semantics."""
-    e = np.asarray(edges, dtype=float)
-
-    @pandas_udf("int")
-    def bucket(v: pd.Series) -> pd.Series:
-        x = v.astype(float).to_numpy()
-        # side='left': x == edges[i] -> index i, so bucket = i-1 => (lo, hi]
-        idx = np.searchsorted(e, x, side="left") - 1
-        idx = np.where(x == e[0], 0, idx)  # include_lowest
-        out = idx.astype(float)
-        out[np.isnan(x) | (x < e[0]) | (x > e[-1])] = np.nan
-        return pd.Series(out).astype("Int32")
-
-    return bucket
-
-
-def bucket_column(col: Column, edges: Sequence[float], strategy: str = "native") -> Column:
-    if strategy == "native":
-        return bucket_expr_native(col, edges)
-    if strategy == "arrow":
-        return make_bucket_udf(edges)(col.cast("double"))
-    raise ValueError(f"unknown bucketing strategy: {strategy}")
-
-
 def histogram_counts(
     df: DataFrame,
     value_col: str,
     edges: Sequence[float],
     group_cols: Sequence[str] = (),
-    strategy: str = "native",
 ) -> DataFrame:
     """Per-group zero-filled bin counts: ``group_cols... , counts array<double>``.
 
@@ -89,7 +55,7 @@ def histogram_counts(
     n_bins = len(edges) - 1
     gcols = list(group_cols)
     bucketed = df.select(
-        *gcols, bucket_column(F.col(value_col), edges, strategy).alias("__bucket")
+        *gcols, bucket_expr_native(F.col(value_col), edges).alias("__bucket")
     ).where(F.col("__bucket").isNotNull())
     counted = bucketed.groupBy(*gcols, "__bucket").agg(
         F.count(F.lit(1)).alias("__cnt")
@@ -119,35 +85,3 @@ def histogram_from_values(
     idx = np.searchsorted(e, x, side="left") - 1
     idx = np.where(x == e[0], 0, idx)
     return np.bincount(idx.astype(int), minlength=len(e) - 1).astype(float)
-
-
-def categorical_counts(
-    df: DataFrame,
-    value_col: str,
-    categories: Sequence[str],
-    group_cols: Sequence[str] = (),
-) -> DataFrame:
-    """Per-group counts over a FIXED category list -> ``counts array<double>``.
-
-    Categories absent from a group get 0; values outside the list are ignored
-    (mirrors the frozen-baseline-bin behavior for the categorical path).
-    Native pivot-free implementation: one groupBy on (group, value).
-    """
-    gcols = list(group_cols)
-    counted = (
-        df.where(F.col(value_col).isin(list(categories)))
-        .groupBy(*gcols, value_col)
-        .agg(F.count(F.lit(1)).alias("__cnt"))
-    )
-    pairs = counted.groupBy(*gcols).agg(
-        F.map_from_arrays(
-            F.collect_list(F.col(value_col)), F.collect_list("__cnt")
-        ).alias("__m")
-    )
-    dense = F.array(
-        *[
-            F.coalesce(F.col("__m")[F.lit(c)].cast("double"), F.lit(0.0))
-            for c in categories
-        ]
-    )
-    return pairs.select(*gcols, dense.alias("counts"))

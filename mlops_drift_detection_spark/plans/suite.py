@@ -58,8 +58,6 @@ class SuiteConfig:
     psi_threshold: float = 0.2
     max_content_length: float = 10_000_000.0  # range rule on length(content)
     commit_regex: str = "^[0-9a-f]{40}$"
-    binning_strategy: str = "native"  # or "arrow"
-    check_sha256: bool = True
     # Cache each wave slice (MEMORY_AND_DISK) so the constraint scan, the two
     # drift aggs and the per-partition counts reuse one materialization.
     # Disable when the wave is far larger than cluster memory — the checks
@@ -184,11 +182,7 @@ class ValidationSuite:
                     F.concat(F.lit("value="), F.col("commit").cast("string")),
                 )
             )
-        if (
-            on("sha256_invariant")
-            and cfg.check_sha256
-            and "content_sha256" in df.columns
-        ):
+        if on("sha256_invariant") and "content_sha256" in df.columns:
             rules.append(
                 C.RowRule(
                     "sha256_invariant",
@@ -221,7 +215,6 @@ class ValidationSuite:
             prepared,
             self.baseline,
             partition_col=PART,
-            strategy=cfg.binning_strategy,
             psi_threshold=cfg.psi_threshold,
         )
 

@@ -867,8 +867,10 @@ def q_json_schema_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum(F.when(is_base, 1).otherwise(0)).alias("t_base"),
         F.sum(F.when(~is_base, 1).otherwise(0)).alias("t_curr"),
     )
-    rb = F.col("n_base") / F.col("t_base")
-    rc = F.col("n_curr") / F.col("t_curr")
+    # nullif guards: an EMPTY half has t = 0, and under ANSI mode a bare
+    # division throws DIVIDE_BY_ZERO; the half's rates read NULL instead
+    rb = F.col("n_base") / F.nullif(F.col("t_base"), F.lit(0))
+    rc = F.col("n_curr") / F.nullif(F.col("t_curr"), F.lit(0))
     status = (
         F.when(F.col("n_base") == 0, F.lit("new"))
         .when(F.col("n_curr") == 0, F.lit("vanished"))
@@ -911,13 +913,14 @@ tot AS (
   FROM events
 )
 SELECT prop_key, n_base, n_curr,
-       round(n_base::DOUBLE / t_base, 6) AS rate_base,
-       round(n_curr::DOUBLE / t_curr, 6) AS rate_curr,
-       round(n_curr::DOUBLE / t_curr - n_base::DOUBLE / t_base, 6)
-         AS rate_delta,
+       round(n_base::DOUBLE / nullif(t_base, 0), 6) AS rate_base,
+       round(n_curr::DOUBLE / nullif(t_curr, 0), 6) AS rate_curr,
+       round(n_curr::DOUBLE / nullif(t_curr, 0)
+             - n_base::DOUBLE / nullif(t_base, 0), 6) AS rate_delta,
        CASE WHEN n_base = 0 THEN 'new'
             WHEN n_curr = 0 THEN 'vanished'
-            WHEN abs(n_curr::DOUBLE / t_curr - n_base::DOUBLE / t_base) > 0.1
+            WHEN abs(n_curr::DOUBLE / nullif(t_curr, 0)
+                     - n_base::DOUBLE / nullif(t_base, 0)) > 0.1
               THEN 'shifted'
             ELSE 'stable' END AS status
 FROM counts, tot

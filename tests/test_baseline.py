@@ -177,7 +177,7 @@ def test_degenerate_bins_compat_reproduces_reference_blindspot(spark):
     massive proportion shift (drift UNDETECTABLE); native mode's proportion
     test alarms on the same shift."""
     from mlops_drift_detection_spark.baseline import compute_baseline_auto
-    from mlops_drift_detection_spark.operators.drift import auto_drift_verdicts
+    from mlops_drift_detection_spark.operators.drift import fused_drift_verdicts
 
     base_df = _dispatch_df(spark, shift=False)
     drifted_df = _dispatch_df(spark, shift=True)  # 0.2 -> 0.8 proportion of 1s
@@ -188,11 +188,11 @@ def test_degenerate_bins_compat_reproduces_reference_blindspot(spark):
     assert "bin01" in compat.numerical and not compat.binary
     nb = compat.numerical["bin01"]
     assert nb.bins == [0.0, 1.0]  # degenerate 2-edge/1-count set
-    compat_verdicts = auto_drift_verdicts(drifted_df, compat).collect()
+    compat_verdicts = fused_drift_verdicts(drifted_df, compat).collect()
     assert all(not r["drift_detected"] for r in compat_verdicts)  # blind
 
     native = compute_baseline_auto(base_df, ["bin01"], exact_quantiles=True)
-    native_verdicts = auto_drift_verdicts(drifted_df, native).collect()
+    native_verdicts = fused_drift_verdicts(drifted_df, native).collect()
     assert len(native_verdicts) == 1
     r = native_verdicts[0]
     assert r["kind"] == "categorical_binary"

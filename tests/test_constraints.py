@@ -1,7 +1,10 @@
 """Constraint checks: planted-violation exactness + rule unit behavior."""
 
+import re
+
 import pandas as pd
 import pytest
+from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 from mlops_drift_detection_spark.datagen import (
@@ -44,22 +47,83 @@ def test_referential_plan_broadcasts(fixture):
     assert "Broadcast" in plan
 
 
+COMMIT_RE = "^[0-9a-f]{40}$"
+
+
+def not_null_rule(column: str) -> C.RowRule:
+    return C.RowRule("not_null", column, F.col(column).isNull(), F.lit("null value"))
+
+
+def not_empty_rule(column: str) -> C.RowRule:
+    return C.RowRule(
+        "not_empty",
+        column,
+        F.col(column).isNotNull() & (F.length(column) == 0),
+        F.lit("empty value"),
+    )
+
+
+def range_rule(column: str, value: Column, lo: float, hi: float) -> C.RowRule:
+    return C.RowRule(
+        "range",
+        column,
+        value.isNotNull() & ((value < F.lit(lo)) | (value > F.lit(hi))),
+        F.concat(F.lit("value="), value.cast("string")),
+    )
+
+
+def regex_rule(column: str, pattern: str) -> C.RowRule:
+    return C.RowRule(
+        "regex",
+        column,
+        F.col(column).isNotNull() & ~F.col(column).rlike(pattern),
+        F.concat(F.lit("value="), F.col(column).cast("string")),
+    )
+
+
+def sha256_rule() -> C.RowRule:
+    return C.RowRule(
+        "sha256_invariant",
+        "content",
+        F.col("content").isNotNull()
+        & (F.sha2(F.col("content"), 256) != F.col("content_sha256")),
+        F.concat(F.lit("expected="), F.col("content_sha256")),
+    )
+
+
+def zscore_rule(
+    column: str, mean: float, std: float, threshold: float = 3.0
+) -> C.RowRule:
+    """|value - mean| / std > threshold against FROZEN baseline stats. A
+    zero std makes z NULL, so no row violates (drift_detector.py:319)."""
+    value = F.col(column).cast("double")
+    z = F.abs((value - F.lit(mean)) / F.nullif(F.lit(std), F.lit(0.0)))
+    sev = F.when(z > 5.0, F.lit("high")).otherwise(F.lit("medium"))
+    return C.RowRule(
+        "zscore",
+        column,
+        F.col(column).isNotNull() & (z > F.lit(threshold)),
+        F.concat(F.lit("z="), F.round(z, 2), F.lit(" severity="), sev),
+    )
+
+
 def test_null_and_empty_planted(fixture):
     spec, cf, _ = fixture
     exp = expected_violation_counts(spec)
-    assert C.null_violations(cf, "lang").count() == exp["null_lang"]
-    assert C.not_empty_violations(cf, "content").count() == exp["null_lang"]
+    v = C.fused_row_violations(cf, [not_null_rule("lang"), not_empty_rule("content")])
+    got = {r["check"]: r["count"] for r in v.groupBy("check").count().collect()}
+    assert got == {"not_null": exp["null_lang"], "not_empty": exp["null_lang"]}
 
 
 def test_sha256_invariant(fixture, spark):
     _, cf, _ = fixture
-    assert C.sha256_invariant_violations(cf).count() == 0
+    assert C.fused_row_violations(cf, [sha256_rule()]).count() == 0
     # corrupt one row -> exactly one violation
     corrupted = cf.withColumn(
         "content",
         F.when(F.col("row_id") == 100, F.lit("tampered")).otherwise(F.col("content")),
     )
-    v = C.sha256_invariant_violations(corrupted).collect()
+    v = C.fused_row_violations(corrupted, [sha256_rule()]).collect()
     assert len(v) == 1 and v[0]["check"] == "sha256_invariant"
 
 
@@ -74,9 +138,9 @@ def test_range_and_regex(spark):
             }
         )
     )
-    rv = C.range_violations(df, "n", min_value=0.0, max_value=100.0).collect()
+    rv = C.fused_row_violations(df, [range_rule("n", F.col("n"), 0.0, 100.0)]).collect()
     assert sorted(r["detail"] for r in rv) == ["value=-1.0", "value=150.0"]
-    xv = C.regex_violations(df, "commit", "^[0-9a-f]{40}$").collect()
+    xv = C.fused_row_violations(df, [regex_rule("commit", COMMIT_RE)]).collect()
     assert len(xv) == 2  # uppercase + short
 
 
@@ -86,13 +150,13 @@ def test_zscore_reference_semantics(spark):
         pd.DataFrame({"repo": ["r"] * 3, "path": ["p"] * 3, "commit": ["c"] * 3,
                       "v": [0.0, 4.0, 6.0]})
     )
-    v = C.zscore_violations(df, "v", mean=0.0, std=1.0).collect()
+    v = C.fused_row_violations(df, [zscore_rule("v", mean=0.0, std=1.0)]).collect()
     assert len(v) == 2
     details = {r["detail"] for r in v}
     assert any("severity=medium" in d for d in details)
     assert any("severity=high" in d for d in details)
     # zero std -> no violations (guard, drift_detector.py:319)
-    assert C.zscore_violations(df, "v", mean=0.0, std=0.0).count() == 0
+    assert C.fused_row_violations(df, [zscore_rule("v", mean=0.0, std=0.0)]).count() == 0
 
 
 def test_violation_shape_uniform(fixture, spark):
@@ -100,7 +164,7 @@ def test_violation_shape_uniform(fixture, spark):
     dfs = [
         C.uniqueness_violations(cf),
         C.referential_violations(cf, cm),
-        C.null_violations(cf, "lang"),
+        C.fused_row_violations(cf, [not_null_rule("lang")]),
         C.empty_violations(spark),
     ]
     for d in dfs:
@@ -108,65 +172,40 @@ def test_violation_shape_uniform(fixture, spark):
 
 
 def test_fused_row_violations_equals_union(fixture, spark):
-    """The single-scan fused path emits EXACTLY the rows of the per-check
-    union (same check/column/detail strings, same multiset)."""
+    """The single-scan fused path emits EXACTLY the rows a pandas mirror of
+    the four rules produces over the collected fixture (same
+    check/column/detail strings, same multiset)."""
     _, cf, _ = fixture
-    clen = F.length("content")
     rules = [
-        C.RowRule("not_null", "lang", F.col("lang").isNull(), F.lit("null value")),
-        C.RowRule(
-            "not_empty",
-            "content",
-            F.col("content").isNotNull() & (clen == 0),
-            F.lit("empty value"),
-        ),
-        C.RowRule(
-            "range",
-            "content_length",
-            clen.isNotNull() & ((clen < F.lit(1.0)) | (clen > F.lit(5000.0))),
-            F.concat(F.lit("value="), clen.cast("string")),
-        ),
-        C.RowRule(
-            "regex",
-            "commit",
-            F.col("commit").isNotNull() & ~F.col("commit").rlike("^[0-9a-f]{40}$"),
-            F.concat(F.lit("value="), F.col("commit").cast("string")),
-        ),
+        not_null_rule("lang"),
+        not_empty_rule("content"),
+        range_rule("content_length", F.length("content"), 1.0, 5000.0),
+        regex_rule("commit", COMMIT_RE),
     ]
     fused = sorted(map(tuple, C.fused_row_violations(cf, rules).collect()))
-    union = sorted(
-        map(
-            tuple,
-            C.null_violations(cf, "lang")
-            .unionByName(C.not_empty_violations(cf, "content"))
-            .unionByName(
-                C.range_violations(
-                    cf.withColumn("content_length", clen),
-                    "content_length",
-                    min_value=1.0,
-                    max_value=5000.0,
-                )
-            )
-            .unionByName(C.regex_violations(cf, "commit", "^[0-9a-f]{40}$"))
-            .collect(),
-        )
-    )
+
+    pdf = cf.select("repo", "path", "commit", "lang", "content").toPandas()
+    want = []
+    for r in pdf.itertuples(index=False):
+        keys = (r.repo, r.path, r.commit)
+        if r.lang is None:
+            want.append((None, "not_null", "lang", *keys, "null value"))
+        if r.content is not None:
+            n = len(r.content)
+            if n == 0:
+                want.append((None, "not_empty", "content", *keys, "empty value"))
+            if n < 1 or n > 5000:
+                want.append((None, "range", "content_length", *keys, f"value={n}"))
+        if r.commit is not None and not re.search(COMMIT_RE, r.commit):
+            want.append((None, "regex", "commit", *keys, f"value={r.commit}"))
     assert len(fused) > 0
-    assert fused == union
+    assert fused == sorted(want)
 
 
 def test_fused_row_violations_single_scan_plan(fixture):
     """The fused plan touches the input relation once (one scan leaf)."""
     _, cf, _ = fixture
-    rules = [
-        C.RowRule("not_null", "lang", F.col("lang").isNull(), F.lit("null value")),
-        C.RowRule(
-            "regex",
-            "commit",
-            F.col("commit").isNotNull() & ~F.col("commit").rlike("^[0-9a-f]{40}$"),
-            F.concat(F.lit("value="), F.col("commit").cast("string")),
-        ),
-    ]
+    rules = [not_null_rule("lang"), regex_rule("commit", COMMIT_RE)]
     plan = C.fused_row_violations(cf, rules)._jdf.queryExecution().optimizedPlan().toString()
     assert plan.lower().count("inmemoryrelation") + plan.lower().count("logicalrdd") <= 1
 

@@ -68,7 +68,7 @@ def test_ngram_jaccard_verification(docs, spark):
 
 
 def test_simhash_near_dups(docs):
-    sim = D.simhash64(docs, "text", "id").cache()
+    sim = D.simhash64_native(docs, "text", "id").cache()
     vals = {r["id"]: r["simhash"] for r in sim.collect()}
     assert vals[0] == vals[1]  # identical text -> identical simhash
     d02 = bin(vals[0] ^ vals[2]).count("1")

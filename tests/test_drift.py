@@ -1,17 +1,27 @@
 """Drift verdicts vs a verbatim-reference pandas oracle, plus the
-normal-vs-drifted behavioral contract (test_drift_detection.py pattern)."""
+normal-vs-drifted behavioral contract (test_drift_detection.py pattern).
+
+Every verdict comes from the one drift operator, ``fused_drift_verdicts``;
+the oracles here are pandas/numpy and share no Spark code with it."""
 
 import numpy as np
 import pandas as pd
 import pytest
-from pyspark.sql import functions as F
 
-from mlops_drift_detection_spark.baseline import compute_baseline
+from mlops_drift_detection_spark.baseline import (
+    BaselineSnapshot,
+    BinaryBaseline,
+    compute_baseline,
+)
 from mlops_drift_detection_spark.operators.drift import (
-    categorical_drift,
     drift_summary,
-    numerical_drift,
-    proportion_drift,
+    fused_drift_verdicts,
+)
+from mlops_drift_detection_spark.operators.histogram import histogram_from_values
+from mlops_drift_detection_spark.operators.psi import (
+    ks_from_counts,
+    psi_from_counts,
+    psi_severity,
 )
 
 RNG = np.random.RandomState(42)
@@ -58,6 +68,83 @@ def reference_numerical_drift(baseline_bins, baseline_counts, baseline_mean,
     }
 
 
+def mirror_drift_verdicts(pdf: pd.DataFrame, snap: BaselineSnapshot,
+                          partition_col: str, psi_threshold: float = 0.2,
+                          diff_threshold: float = 0.1) -> dict:
+    """Pandas/numpy mirror of fused_drift_verdicts: one verdict dict per
+    (partition, feature), keyed by that pair.
+
+    numerical   — the verbatim reference (above) for PSI/moments, numpy KS
+                  over the pd.cut-equivalent histogram; n_samples counts
+                  every row of the partition, NULLs included.
+    categorical — counts over the frozen category list (NULLs and unknown
+                  values drop out); no row when no value hits the list;
+                  mean = top-category share, n_samples = in-list count.
+    binary      — the reference's proportion-difference test
+                  (drift_detector.py:203-225); no KS.
+    """
+    out = {}
+    for part, g in pdf.groupby(partition_col):
+        part = str(part)
+        for feat, nb in snap.numerical.items():
+            v = g[feat].astype(float)
+            ref = reference_numerical_drift(nb.bins, nb.counts, nb.mean, nb.std, v)
+            counts = histogram_from_values(v.to_numpy(), nb.bins)
+            out[(part, feat)] = {
+                **ref,
+                "partition": part, "feature": feat, "kind": "numerical",
+                "ks": round(ks_from_counts(nb.counts, counts), 4),
+                "baseline_mean": round(nb.mean, 4),
+                "baseline_std": round(nb.std, 4),
+                "n_samples": len(g),
+            }
+        for feat, cb in snap.categorical.items():
+            hits = g[feat].value_counts()
+            counts = [float(hits.get(c, 0)) for c in cb.categories]
+            total = sum(counts)
+            if total == 0:
+                continue
+            psi = psi_from_counts(cb.counts, counts)
+            bmean = cb.proportions[0] if cb.proportions else 0.0
+            cur = counts[0] / total
+            out[(part, feat)] = {
+                "partition": part, "feature": feat, "kind": "categorical",
+                "psi": round(psi, 4),
+                "ks": round(ks_from_counts(cb.counts, counts), 4),
+                "drift_detected": psi >= psi_threshold,
+                "drift_severity": psi_severity(psi),
+                "baseline_mean": round(bmean, 4),
+                "current_mean": round(cur, 4),
+                "mean_change_pct": (
+                    round((cur - bmean) / bmean * 100, 2) if bmean else 0.0
+                ),
+                "baseline_std": 0.0, "current_std": 0.0,
+                "n_samples": int(total),
+            }
+        for feat, bb in snap.binary.items():
+            prop = float(g[feat].dropna().astype(float).mean())
+            diff = abs(prop - bb.proportion_ones)
+            out[(part, feat)] = {
+                "partition": part, "feature": feat, "kind": "categorical_binary",
+                "psi": round(diff, 4), "ks": None,
+                "drift_detected": diff >= diff_threshold,
+                "drift_severity": (
+                    "high" if diff >= 0.2 else "medium" if diff >= 0.1 else "low"
+                ),
+                "baseline_mean": round(bb.proportion_ones, 4),
+                "current_mean": round(prop, 4),
+                "mean_change_pct": 0.0, "baseline_std": 0.0, "current_std": 0.0,
+                "n_samples": len(g),
+            }
+    return out
+
+
+def _only_verdict(df, snap, **kw) -> dict:
+    rows = fused_drift_verdicts(df, snap, **kw).collect()
+    assert len(rows) == 1
+    return rows[0].asDict()
+
+
 @pytest.fixture(scope="module")
 def baseline_and_data(spark):
     base_pdf = pd.DataFrame({"v": RNG.lognormal(5, 0.8, 5000)})
@@ -66,17 +153,16 @@ def baseline_and_data(spark):
     return snap, base_pdf
 
 
-@pytest.mark.parametrize("strategy", ["native", "arrow"])
 @pytest.mark.parametrize(
     "shift", [lambda s: s, lambda s: s * 3.0, lambda s: s + 200.0]
 )
-def test_numerical_matches_reference(spark, baseline_and_data, strategy, shift):
+def test_numerical_matches_reference(spark, baseline_and_data, shift):
     snap, base_pdf = baseline_and_data
     prod = shift(pd.Series(RNG.lognormal(5, 0.8, 2000)))
     nb = snap.numerical["v"]
     want = reference_numerical_drift(nb.bins, nb.counts, nb.mean, nb.std, prod)
     df = spark.createDataFrame(prod.to_frame("v"))
-    got = numerical_drift(df, "v", snap, strategy=strategy).collect()[0].asDict()
+    got = _only_verdict(df, snap)
     assert got["psi"] == pytest.approx(want["psi"], abs=2e-4)
     assert got["drift_detected"] == want["drift_detected"]
     assert got["drift_severity"] == want["drift_severity"]
@@ -88,16 +174,14 @@ def test_numerical_matches_reference(spark, baseline_and_data, strategy, shift):
 def test_normal_batch_no_alarm(spark, baseline_and_data):
     snap, _ = baseline_and_data
     prod = pd.Series(RNG.lognormal(5, 0.8, 3000))
-    df = spark.createDataFrame(prod.to_frame("v"))
-    row = numerical_drift(df, "v", snap).collect()[0]
+    row = _only_verdict(spark.createDataFrame(prod.to_frame("v")), snap)
     assert not row["drift_detected"] and row["psi"] < 0.1
 
 
 def test_shifted_batch_alarms(spark, baseline_and_data):
     snap, _ = baseline_and_data
     prod = pd.Series(RNG.lognormal(5.9, 0.8, 3000))  # big location shift
-    df = spark.createDataFrame(prod.to_frame("v"))
-    row = numerical_drift(df, "v", snap).collect()[0]
+    row = _only_verdict(spark.createDataFrame(prod.to_frame("v")), snap)
     assert row["drift_detected"] and row["psi"] >= 0.2
     assert row["drift_severity"] == "high"
     assert row["ks"] > 0.2
@@ -107,23 +191,25 @@ def test_categorical_drift_alarm(spark):
     base = pd.DataFrame({"lang": ["py"] * 600 + ["go"] * 300 + ["rs"] * 100})
     cur = pd.DataFrame({"lang": ["py"] * 100 + ["go"] * 300 + ["rs"] * 600})
     snap = compute_baseline(spark.createDataFrame(base), [], ["lang"])
-    same = categorical_drift(spark.createDataFrame(base), "lang", snap).collect()[0]
+    same = _only_verdict(spark.createDataFrame(base), snap)
     assert same["psi"] == 0.0 and not same["drift_detected"]
-    moved = categorical_drift(spark.createDataFrame(cur), "lang", snap).collect()[0]
+    moved = _only_verdict(spark.createDataFrame(cur), snap)
     assert moved["drift_detected"] and moved["psi"] >= 0.2
 
 
 def test_proportion_drift_reference_thresholds(spark):
     # reference: drift_detector.py:203-225 — diff >= .1 drift, >= .2 high
+    snap = BaselineSnapshot(n_samples=100, binary={"b": BinaryBaseline(0.50, 100)})
     df = spark.createDataFrame(pd.DataFrame({"b": [1] * 35 + [0] * 65}))
-    r = proportion_drift(df, "b", baseline_proportion=0.50).collect()[0]
+    r = _only_verdict(df, snap)
+    assert r["kind"] == "categorical_binary" and r["ks"] is None
     assert r["drift_detected"] and r["drift_severity"] == "medium"
     assert r["psi"] == pytest.approx(0.15)
     df2 = spark.createDataFrame(pd.DataFrame({"b": [1] * 5 + [0] * 95}))
-    r2 = proportion_drift(df2, "b", baseline_proportion=0.50).collect()[0]
+    r2 = _only_verdict(df2, snap)
     assert r2["drift_severity"] == "high"
     df3 = spark.createDataFrame(pd.DataFrame({"b": [1] * 45 + [0] * 55}))
-    r3 = proportion_drift(df3, "b", baseline_proportion=0.50).collect()[0]
+    r3 = _only_verdict(df3, snap)
     assert not r3["drift_detected"] and r3["drift_severity"] == "low"
 
 
@@ -132,7 +218,7 @@ def test_partitioned_verdicts_and_summary(spark, baseline_and_data):
     normal = pd.DataFrame({"p": "a", "v": RNG.lognormal(5, 0.8, 2000)})
     shifted = pd.DataFrame({"p": "b", "v": RNG.lognormal(6.2, 0.8, 2000)})
     df = spark.createDataFrame(pd.concat([normal, shifted]))
-    verd = numerical_drift(df, "v", snap, partition_col="p")
+    verd = fused_drift_verdicts(df, snap, partition_col="p")
     rows = {r["partition"]: r for r in verd.collect()}
     assert not rows["a"]["drift_detected"]
     assert rows["b"]["drift_detected"]
@@ -150,73 +236,21 @@ def test_psi_merged_not_averaged(spark, baseline_and_data):
     prod = pd.DataFrame({"v": RNG.lognormal(5.5, 0.8, 4000)})
     d1 = spark.createDataFrame(prod).repartition(1)
     d2 = spark.createDataFrame(prod).repartition(17)
-    p1 = numerical_drift(d1, "v", snap).collect()[0]["psi"]
-    p2 = numerical_drift(d2, "v", snap).collect()[0]["psi"]
-    assert p1 == p2
-
-
-def test_fused_two_feature_drift_equals_separate(spark):
-    """fused_two_feature_drift is a PHYSICAL fusion only: verdict rows must
-    be exactly the separate operators' union, and the physical plan must
-    reuse the shared exchange (one scan, not two)."""
-    import pandas as pd
-
-    from mlops_drift_detection_spark.baseline import compute_baseline
-    from mlops_drift_detection_spark.operators.drift import (
-        categorical_drift,
-        fused_two_feature_drift,
-        numerical_drift,
-    )
-
-    rng = __import__("numpy").random.RandomState(3)
-    n = 2000
-    pdf = pd.DataFrame(
-        {
-            "part": [str(i % 4) for i in range(n)],
-            "lang": rng.choice(["a", "b", "c"], n, p=[0.5, 0.3, 0.2]),
-            "ln": rng.lognormal(5, 0.5, n),
-        }
-    )
-    # plant nulls + out-of-range values on both columns
-    pdf.loc[:20, "lang"] = None
-    pdf.loc[21:40, "ln"] = None
-    df = spark.createDataFrame(pdf)
-    baseline = compute_baseline(df, ["ln"], ["lang"], exact_quantiles=True)
-
-    fused = fused_two_feature_drift(df, "ln", "lang", baseline, partition_col="part")
-    sep = numerical_drift(df, "ln", baseline, partition_col="part").unionByName(
-        categorical_drift(df, "lang", baseline, partition_col="part")
-    )
-    key = lambda r: (r["partition"], r["feature"])  # noqa: E731
-    got = {key(r): r.asDict() for r in fused.collect()}
-    want = {key(r): r.asDict() for r in sep.collect()}
-    assert got == want
-
-    # physical shape: after the micro-table checkpoint materializes (ONE
-    # pass over the input), neither marginal touches the source again —
-    # the final plan reads only the checkpointed RDD
-    plan = fused._jdf.queryExecution().executedPlan().toString()
-    final = plan.split("== Initial Plan ==")[0]
-    assert "Scan ExistingRDD" in final or "LogicalRDD" in final or final.count("Scan") == 0
-    assert "Scan parquet" not in final and "LocalTableScan" not in final.replace(
-        "Scan ExistingRDD", ""
-    )
+    assert _only_verdict(d1, snap)["psi"] == _only_verdict(d2, snap)["psi"]
 
 
 def _multi_feature_fixture(spark):
     """3 numerical + 2 categorical + 1 binary features, 4 partitions, with
     planted nulls on every kind and one partition (p3) whose categorical
     values all miss the frozen list."""
-    import pandas as pd
-
     from mlops_drift_detection_spark.baseline import compute_baseline_auto
 
-    rng = __import__("numpy").random.RandomState(7)
+    rng = np.random.RandomState(7)
     n = 4000
     base = pd.DataFrame(
         {
-            # integer-valued doubles: float sums are exact, so the fused and
-            # per-feature paths agree bit-for-bit, not just post-rounding
+            # integer-valued doubles: float sums are exact, so the moment
+            # sums do not depend on aggregation order
             "ln": rng.randint(0, 500, n).astype(float),
             "n2": rng.randint(-50, 50, n).astype(float),
             "n3": rng.randint(0, 10, n).astype(float),
@@ -247,23 +281,42 @@ def _multi_feature_fixture(spark):
     cur.loc[61:90, "b1"] = None
     # p3: every lang value outside the frozen {py,go,rs} list
     cur.loc[cur["part"] == "p3", "lang"] = "zz"
-    return snap, spark.createDataFrame(cur)
+    return snap, cur, spark.createDataFrame(cur)
+
+
+_ROUNDED_FIELDS = {  # field -> decimals the verdict rounds it to
+    "psi": 4, "ks": 4, "baseline_mean": 4, "current_mean": 4,
+    "mean_change_pct": 2, "baseline_std": 4, "current_std": 4,
+}
 
 
 def test_fused_n_feature_drift_identical_to_per_feature(spark):
-    """fused_drift_verdicts == the per-feature union for every (partition,
-    feature), including the no-frozen-category-hit partition, which BOTH
-    paths must drop for the categorical feature."""
-    from mlops_drift_detection_spark.operators.drift import auto_drift_verdicts
-
-    snap, cur = _multi_feature_fixture(spark)
-    fused = auto_drift_verdicts(cur, snap, partition_col="part", fused=True)
-    sep = auto_drift_verdicts(cur, snap, partition_col="part", fused=False)
-    key = lambda r: (r["partition"], r["feature"])  # noqa: E731
-    got = {key(r): r.asDict() for r in fused.collect()}
-    want = {key(r): r.asDict() for r in sep.collect()}
-    assert got == want
-    # the planted all-unknown partition emits NO lang row on either path
+    """fused_drift_verdicts equals the per-feature pandas mirror for every
+    (partition, feature) of all three kinds, including the partition with
+    no frozen-category hit, which emits no row for that categorical
+    feature. Rounded fields may differ by one unit in the last place
+    (Spark rounds HALF_UP on the decimal string, Python on the binary
+    value)."""
+    snap, cur_pdf, cur = _multi_feature_fixture(spark)
+    got = {
+        (r["partition"], r["feature"]): r.asDict()
+        for r in fused_drift_verdicts(cur, snap, partition_col="part").collect()
+    }
+    want = mirror_drift_verdicts(cur_pdf, snap, "part")
+    assert set(got) == set(want)
+    assert {w["kind"] for w in want.values()} == {
+        "numerical", "categorical", "categorical_binary"
+    }
+    for key, w in want.items():
+        g = got[key]
+        assert set(g) == set(w), key
+        for field, value in w.items():
+            if field in _ROUNDED_FIELDS and value is not None:
+                tol = 1.5 * 10 ** -_ROUNDED_FIELDS[field]
+                assert g[field] == pytest.approx(value, abs=tol), (key, field)
+            else:
+                assert g[field] == value, (key, field)
+    # the planted all-unknown partition emits NO lang row ...
     assert ("p3", "lang") not in got
     # ... but still emits its numerical + binary rows
     assert ("p3", "ln") in got and ("p3", "b1") in got
@@ -271,26 +324,14 @@ def test_fused_n_feature_drift_identical_to_per_feature(spark):
 
 def test_fused_n_feature_drift_single_scan(spark, tmp_path):
     """SURVEY §2.10: the N-feature pass is ONE multi-agg job — the physical
-    plan reads the input exactly once; the per-feature path reads it once
-    per feature."""
-    from mlops_drift_detection_spark.operators.drift import auto_drift_verdicts
-
-    snap, cur = _multi_feature_fixture(spark)
+    plan reads the input exactly once, whatever the feature count."""
+    snap, _, cur = _multi_feature_fixture(spark)
     path = str(tmp_path / "cur_parquet")
     cur.write.mode("overwrite").parquet(path)
     on_disk = spark.read.parquet(path)
 
     fused_plan = (
-        auto_drift_verdicts(on_disk, snap, partition_col="part", fused=True)
-        ._jdf.queryExecution()
-        .executedPlan()
-        .toString()
-        .split("== Initial Plan ==")[0]
-    )
-    assert fused_plan.count("Scan parquet") == 1
-
-    sep_plan = (
-        auto_drift_verdicts(on_disk, snap, partition_col="part", fused=False)
+        fused_drift_verdicts(on_disk, snap, partition_col="part")
         ._jdf.queryExecution()
         .executedPlan()
         .toString()
@@ -298,7 +339,7 @@ def test_fused_n_feature_drift_single_scan(spark, tmp_path):
     )
     n_features = len(snap.numerical) + len(snap.categorical) + len(snap.binary)
     assert n_features == 6
-    assert sep_plan.count("Scan parquet") == n_features
+    assert fused_plan.count("Scan parquet") == 1
 
 
 def test_json_schema_drift_shifted_status(spark, tmp_path):
@@ -306,31 +347,41 @@ def test_json_schema_drift_shifted_status(spark, tmp_path):
     key `ab` drops from 2/3 presence to 1/3 (-> shifted), `k` stays at
     1.0 (-> stable). Event ids avoid the catalog query's planting
     residues (% 11 in the baseline half, % 5 in the current half) so the
-    planted payloads pass through unmodified."""
+    planted payloads pass through unmodified. An input whose current half
+    is EMPTY must not raise DIVIDE_BY_ZERO under ANSI mode: every key
+    reads ``vanished`` with NULL current rates."""
     from mlops_drift_detection_spark.queries import q_json_schema_drift
     from pyspark.sql import functions as F
 
-    rows = [
+    def run(rows, name):
+        ev = spark.createDataFrame(
+            rows, "event_id long, ts_s string, props string"
+        ).select(
+            "event_id",
+            F.col("ts_s").cast("timestamp").alias("ts"),
+            F.lit(1).alias("user_id"),
+            F.lit("t").alias("event_type"),
+            F.lit(0.0).alias("value"),
+            "props",
+        )
+        out = str(tmp_path / name)
+        ev.write.parquet(f"{out}/events.parquet")
+        return {r["prop_key"]: r for r in q_json_schema_drift(spark, out).collect()}
+
+    base_half = [
         (1, "2024-01-10 00:00:00", '{"k": 1, "ab": 1}'),
         (2, "2024-01-10 00:00:00", '{"k": 1, "ab": 1}'),
         (3, "2024-01-10 00:00:00", '{"k": 1}'),
-        (6, "2024-01-20 00:00:00", '{"k": 1}'),
-        (7, "2024-01-20 00:00:00", '{"k": 1}'),
-        (8, "2024-01-20 00:00:00", '{"k": 1, "ab": 1}'),
     ]
-    ev = spark.createDataFrame(
-        rows, "event_id long, ts_s string, props string"
-    ).select(
-        "event_id",
-        F.col("ts_s").cast("timestamp").alias("ts"),
-        F.lit(1).alias("user_id"),
-        F.lit("t").alias("event_type"),
-        F.lit(0.0).alias("value"),
-        "props",
+    got = run(
+        base_half
+        + [
+            (6, "2024-01-20 00:00:00", '{"k": 1}'),
+            (7, "2024-01-20 00:00:00", '{"k": 1}'),
+            (8, "2024-01-20 00:00:00", '{"k": 1, "ab": 1}'),
+        ],
+        "ev",
     )
-    out = str(tmp_path / "ev")
-    ev.write.parquet(f"{out}/events.parquet")
-    got = {r["prop_key"]: r for r in q_json_schema_drift(spark, out).collect()}
     assert set(got) == {"k", "ab"}
     assert got["k"]["status"] == "stable"
     assert got["k"]["rate_delta"] == 0.0
@@ -338,6 +389,13 @@ def test_json_schema_drift_shifted_status(spark, tmp_path):
     assert ab["status"] == "shifted"
     assert (ab["n_base"], ab["n_curr"]) == (2, 1)
     assert ab["rate_delta"] == pytest.approx(1 / 3 - 2 / 3, abs=1e-6)
+
+    empty_curr = run(base_half, "ev_empty_curr")
+    assert set(empty_curr) == {"k", "ab"}
+    for r in empty_curr.values():
+        assert r["status"] == "vanished" and r["n_curr"] == 0
+        assert r["rate_curr"] is None and r["rate_delta"] is None
+    assert empty_curr["ab"]["rate_base"] == pytest.approx(2 / 3, abs=1e-6)
 
 
 def test_funnel_conversion_first_touch_semantics(spark, tmp_path):

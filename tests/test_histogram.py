@@ -3,10 +3,8 @@
 import numpy as np
 import pandas as pd
 import pytest
-from pyspark.sql import functions as F
 
 from mlops_drift_detection_spark.operators.histogram import (
-    categorical_counts,
     histogram_counts,
     histogram_from_values,
 )
@@ -36,11 +34,9 @@ DATASETS = [
 
 
 @pytest.mark.parametrize("values", DATASETS, ids=range(len(DATASETS)))
-@pytest.mark.parametrize("strategy", ["native", "arrow"])
-def test_histogram_matches_pd_cut(spark, values, strategy):
-    clean = [v for v in values]
-    df = spark.createDataFrame([(v,) for v in clean], "x double")
-    got_rows = histogram_counts(df, "x", EDGES, strategy=strategy).collect()
+def test_histogram_matches_pd_cut(spark, values):
+    df = spark.createDataFrame([(v,) for v in values], "x double")
+    got_rows = histogram_counts(df, "x", EDGES).collect()
     want = pd_cut_counts([v for v in values if v is not None], EDGES)
     if not got_rows:
         assert want.sum() == 0
@@ -78,21 +74,3 @@ def test_histogram_partition_invariance(spark):
     c1 = histogram_counts(df1, "x", EDGES).collect()[0]["counts"]
     c2 = histogram_counts(df2, "x", EDGES).collect()[0]["counts"]
     assert list(c1) == list(c2)
-
-
-def test_categorical_counts(spark):
-    rows = [("py",), ("py",), ("go",), ("rs",), (None,), ("zz",)]
-    df = spark.createDataFrame(rows, "lang string")
-    got = categorical_counts(df, "lang", ["py", "go", "java"]).collect()[0]["counts"]
-    # fixed category order; 'zz' outside list ignored; 'java' zero-filled
-    assert list(got) == [2.0, 1.0, 0.0]
-
-
-def test_categorical_counts_grouped(spark):
-    rows = [("s1", "py"), ("s1", "py"), ("s1", "go"), ("s2", "go")]
-    df = spark.createDataFrame(rows, "src string, lang string")
-    got = {
-        r["src"]: list(r["counts"])
-        for r in categorical_counts(df, "lang", ["py", "go"], ["src"]).collect()
-    }
-    assert got == {"s1": [2.0, 1.0], "s2": [0.0, 1.0]}
