@@ -155,7 +155,7 @@ def run_full_pass(spark, paths: dict[str, str], n_rows: int) -> dict:
     """The north-rule metric: validated rows/sec, full constraint+drift pass.
 
     Config is PINNED to the one BENCH.md's scaling table documents
-    (cache_waves=False, 32 buckets, maxPartitionBytes=48m) so this number is
+    (32 buckets, maxPartitionBytes=48m) so this number is
     comparable across rounds AND against the recorded 2M/32M reference
     points — fixed overheads dominate at 2M (see BENCH.md "expected at 2M"),
     so compare like scale with like scale."""
@@ -171,7 +171,7 @@ def run_full_pass(spark, paths: dict[str, str], n_rows: int) -> dict:
     # for the IDENTICAL pass)
     cf.select(F.sum(F.length("content"))).collect()
     baseline = ValidationSuite.compute_baseline_snapshot(cf)
-    cfg = SuiteConfig(n_partition_buckets=32, cache_waves=False)
+    cfg = SuiteConfig(n_partition_buckets=32)
     suite = ValidationSuite(baseline, cfg)
     t0 = time.time()
     res = suite.run(cf, cm)
@@ -186,7 +186,6 @@ def run_full_pass(spark, paths: dict[str, str], n_rows: int) -> dict:
         "validated_rows_per_sec": round(res.n_rows_validated / elapsed, 1),
         "fullpass_config": {
             "rows": n_rows,
-            "cache_waves": cfg.cache_waves,
             "n_buckets": cfg.n_partition_buckets,
             "max_partition_bytes": "48m",
         },

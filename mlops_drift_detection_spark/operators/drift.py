@@ -76,8 +76,8 @@ def fused_drift_verdicts(
          sparse key->count map plus moment sums;
       4. a broadcast join against the baseline spec (feature, kind, frozen
          key list, expected counts, mean/std — KBs for any feature count)
-         densifies the counts and computes PSI / KS / moments / verdict
-         fields in a single kind-switched projection.
+         densifies the counts, projects PSI and KS once each, and derives
+         the moments and verdict fields in one kind-switched projection.
 
     A partition whose rows all miss a feature's frozen category list (or
     are all NULL) emits NO row for that categorical feature: there is no
@@ -185,12 +185,23 @@ def fused_drift_verdicts(
     )
     j = per_feature.join(F.broadcast(spec), per_feature["__f"] == spec["feature"])
 
-    counts = F.transform(
-        F.col("keys"), lambda k: F.coalesce(F.col("__m")[k].cast("double"), F.lit(0.0))
+    # Staged: the dense counts, then their total, PSI and KS, are projected
+    # once each as columns. The verdict projection reads psi four times, and
+    # Catalyst keeps a stage apart rather than duplicate a non-trivial
+    # column, so the plan carries one PSI tree instead of one per use.
+    scored = j.withColumn(
+        "counts",
+        F.transform(
+            F.col("keys"),
+            lambda k: F.coalesce(F.col("__m")[k].cast("double"), F.lit(0.0)),
+        ),
+    ).select(
+        "*",
+        F.aggregate("counts", F.lit(0.0), lambda a, x: a + x).alias("total"),
+        psi_expr(F.col("bcounts"), F.col("counts")).alias("psi"),
+        ks_expr(F.col("bcounts"), F.col("counts")).alias("ks"),
     )
-    total = F.aggregate(counts, F.lit(0.0), lambda a, x: a + x)
-    psi = psi_expr(F.col("bcounts"), counts)
-    ks = ks_expr(F.col("bcounts"), counts)
+    counts, total, psi, ks = (F.col(c) for c in ("counts", "total", "psi", "ks"))
     n = F.col("__n_val").cast("double")
     num_mean = F.when(n > 0, F.col("__tsum") / n).otherwise(F.lit(0.0))
     var = (F.col("__tsum2") - F.col("__tsum") * F.col("__tsum") / n) / (n - 1)
@@ -217,7 +228,7 @@ def fused_drift_verdicts(
     bin_sev = (
         F.when(diff >= 0.2, "high").when(diff >= 0.1, "medium").otherwise("low")
     )
-    return j.where(~(is_cat & (total == 0))).select(
+    return scored.where(~(is_cat & (total == 0))).select(
         F.col("partition").cast("string").alias("partition"),
         "feature",
         "kind",

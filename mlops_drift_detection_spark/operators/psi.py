@@ -23,7 +23,7 @@ per-partition PSIs — PSI is not decomposable.
 
 from __future__ import annotations
 
-from collections.abc import Sequence
+from collections.abc import Callable, Sequence
 
 import numpy as np
 from pyspark.sql import Column
@@ -33,6 +33,10 @@ PROP_FLOOR = 1e-4  # reference: drift_detector.py:75-76
 
 # PSI severity ladder — reference: drift_detector.py:227-234
 PSI_ALARM_THRESHOLD = 0.2
+
+
+def _add(acc: Column, x: Column) -> Column:
+    return acc + x
 
 
 def psi_from_counts(
@@ -88,25 +92,24 @@ def psi_expr(expected_counts: Column, actual_counts: Column) -> Column:
     NULL/short arrays are treated as no-signal -> 0.0, matching the reference's
     guard behavior. Result is a ``double`` column.
     """
-    e = F.transform(expected_counts, lambda x: x.cast("double"))
-    a = F.transform(actual_counts, lambda x: x.cast("double"))
-    e_sum = F.aggregate(e, F.lit(0.0), lambda acc, x: acc + x)
-    a_sum = F.aggregate(a, F.lit(0.0), lambda acc, x: acc + x)
-    e_prop = _prop_array(e, e_sum)
-    a_prop = _prop_array(a, a_sum)
-    terms = F.zip_with(a_prop, e_prop, lambda ap, ep: (ap - ep) * F.log(ap / ep))
-    psi = F.aggregate(terms, F.lit(0.0), lambda acc, x: acc + x)
-    guarded = F.when(
-        expected_counts.isNull()
-        | actual_counts.isNull()
-        | (F.size(expected_counts) != F.size(actual_counts))
-        | (e_sum == F.lit(0.0))
-        | (a_sum == F.lit(0.0))
-        | F.isnan(psi)
-        | (F.abs(psi) == F.lit(float("inf"))),
-        F.lit(0.0),
-    ).otherwise(psi)
-    return guarded
+
+    def psi(e: Column, a: Column, e_sum: Column, a_sum: Column) -> Column:
+        terms = F.zip_with(
+            _prop_array(a, a_sum),
+            _prop_array(e, e_sum),
+            lambda ap, ep: (ap - ep) * F.log(ap / ep),
+        )
+        # the finish step binds the PSI once for its NaN/Inf guard
+        return F.aggregate(
+            terms,
+            F.lit(0.0),
+            _add,
+            lambda v: F.when(
+                F.isnan(v) | (F.abs(v) == F.lit(float("inf"))), F.lit(0.0)
+            ).otherwise(v),
+        )
+
+    return _over_sums(expected_counts, actual_counts, psi)
 
 
 def psi_severity_expr(psi: Column) -> Column:
@@ -166,17 +169,42 @@ def _cdf_array(arr: Column, total: Column) -> Column:
     )
 
 
-def _degenerate_guard(
-    expected_counts: Column, actual_counts: Column, e_sum: Column, a_sum: Column
+def _over_sums(
+    expected_counts: Column,
+    actual_counts: Column,
+    metric: Callable[[Column, Column, Column, Column], Column],
 ) -> Column:
-    """Shared degenerate-input rule for the CDF metrics: either side NULL,
-    size-mismatched, or all-zero -> the metric is 0.0 (no signal)."""
-    return (
+    """``metric(e, a, e_sum, a_sum)`` over the two count arrays cast to
+    double, behind the degenerate-input rule every count-array metric
+    shares: either side NULL, size-mismatched, or all-zero -> 0.0 (no
+    signal).
+
+    Each sum is computed once per row and bound as a lambda variable (the
+    ``finish`` step of ``aggregate``), so ``metric`` may use it any number
+    of times, per-element lambdas included, without the plan carrying (and
+    evaluating) one aggregate per use.
+    """
+    e = F.transform(expected_counts, lambda x: x.cast("double"))
+    a = F.transform(actual_counts, lambda x: x.cast("double"))
+    return F.when(
         expected_counts.isNull()
         | actual_counts.isNull()
-        | (F.size(expected_counts) != F.size(actual_counts))
-        | (e_sum == F.lit(0.0))
-        | (a_sum == F.lit(0.0))
+        | (F.size(expected_counts) != F.size(actual_counts)),
+        F.lit(0.0),
+    ).otherwise(
+        F.aggregate(
+            e,
+            F.lit(0.0),
+            _add,
+            lambda e_sum: F.aggregate(
+                a,
+                F.lit(0.0),
+                _add,
+                lambda a_sum: F.when(
+                    (e_sum == F.lit(0.0)) | (a_sum == F.lit(0.0)), F.lit(0.0)
+                ).otherwise(metric(e, a, e_sum, a_sum)),
+            ),
+        )
     )
 
 
@@ -186,21 +214,14 @@ def ks_expr(expected_counts: Column, actual_counts: Column) -> Column:
     Builds running-sum CDF arrays with ``aggregate`` (accumulating into an
     array), then takes max |diff|.
     """
-    e = F.transform(expected_counts, lambda x: x.cast("double"))
-    a = F.transform(actual_counts, lambda x: x.cast("double"))
-    e_sum = F.aggregate(e, F.lit(0.0), lambda acc, x: acc + x)
-    a_sum = F.aggregate(a, F.lit(0.0), lambda acc, x: acc + x)
-    diffs = F.zip_with(
-        _cdf_array(e, e_sum), _cdf_array(a, a_sum), lambda x, y: F.abs(x - y)
-    )
-    ks = F.array_max(diffs)
-    return (
-        F.when(
-            _degenerate_guard(expected_counts, actual_counts, e_sum, a_sum),
-            F.lit(0.0),
-        )
-        .otherwise(ks)
-        .cast("double")
+    return _over_sums(
+        expected_counts,
+        actual_counts,
+        lambda e, a, e_sum, a_sum: F.array_max(
+            F.zip_with(
+                _cdf_array(e, e_sum), _cdf_array(a, a_sum), lambda x, y: F.abs(x - y)
+            )
+        ),
     )
 
 
@@ -250,25 +271,16 @@ def wasserstein_expr(
     (histogram.bucket_expr_native) NULLs values outside the edges, so
     there is no open tail bin to weigh.
     """
-    e = F.transform(expected_counts, lambda x: x.cast("double"))
-    a = F.transform(actual_counts, lambda x: x.cast("double"))
-    e_sum = F.aggregate(e, F.lit(0.0), lambda acc, x: acc + x)
-    a_sum = F.aggregate(a, F.lit(0.0), lambda acc, x: acc + x)
     w_arr = F.array(*[F.lit(float(w)) for w in widths])
-    diffs = F.zip_with(
-        _cdf_array(e, e_sum), _cdf_array(a, a_sum), lambda x, y: F.abs(x - y)
-    )
-    w1 = F.aggregate(
-        F.zip_with(diffs, w_arr, lambda d, w: d * w),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-    return (
-        F.when(
-            _degenerate_guard(expected_counts, actual_counts, e_sum, a_sum)
-            | (F.size(expected_counts) != F.lit(len(widths))),
-            F.lit(0.0),
+
+    def w1(e: Column, a: Column, e_sum: Column, a_sum: Column) -> Column:
+        diffs = F.zip_with(
+            _cdf_array(e, e_sum), _cdf_array(a, a_sum), lambda x, y: F.abs(x - y)
         )
-        .otherwise(w1)
-        .cast("double")
-    )
+        return F.aggregate(
+            F.zip_with(diffs, w_arr, lambda d, w: d * w), F.lit(0.0), _add
+        )
+
+    return F.when(
+        F.size(expected_counts) != F.lit(len(widths)), F.lit(0.0)
+    ).otherwise(_over_sums(expected_counts, actual_counts, w1))

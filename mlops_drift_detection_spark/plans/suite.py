@@ -18,12 +18,14 @@ idempotent under retry), so resume recovers completed waves' ROWS, not just
 their row counts.
 
 Scale shape: every check is a Column-expression filter or a single
-partial-aggregated shuffle; the pass over N rows does O(1) full scans per
-wave (Spark reuses the cached wave slice across checks when it fits, and
-each check is independently pushdown/prune-friendly when it doesn't).
-The logical partition is ``pmod(xxhash64(repo), n_buckets)``; when the
-input table is WRITTEN partitioned by that id (``part_id`` hive layout),
-wave filters hit the physical partition column and resume prunes whole
+partial-aggregated shuffle. The violations and verdicts plans are built
+ONCE per run; a wave is only a predicate on the logical partition, which
+Catalyst pushes through the aggregates and joins into each check's
+column-pruned scan, so the pass over N rows does O(1) scans per wave and
+no wave slice is cached. The logical partition is
+``pmod(xxhash64(repo), n_buckets)``; when the input table is WRITTEN
+partitioned by that id (``part_id`` hive layout), the pushed wave
+predicate becomes a scan PartitionFilter and resume prunes whole
 directories from the scan — I/O-level skipping, not just compute-level.
 """
 
@@ -39,6 +41,7 @@ from pyspark.sql import functions as F
 from mlops_drift_detection_spark.baseline import BaselineSnapshot, compute_baseline
 from mlops_drift_detection_spark.operators import constraints as C
 from mlops_drift_detection_spark.operators.drift import (
+    VERDICT_SCHEMA,
     drift_summary,
     fused_drift_verdicts,
 )
@@ -58,12 +61,6 @@ class SuiteConfig:
     psi_threshold: float = 0.2
     max_content_length: float = 10_000_000.0  # range rule on length(content)
     commit_regex: str = "^[0-9a-f]{40}$"
-    # Cache each wave slice (MEMORY_AND_DISK) so the constraint scan, the two
-    # drift aggs and the per-partition counts reuse one materialization.
-    # Disable when the wave is far larger than cluster memory — the checks
-    # are each single-scan, so re-reading columnar storage is the cheaper
-    # trade at 100 TB (cache churn + eviction costs more than the rescans).
-    cache_waves: bool = True
     checks: tuple[str, ...] = (
         "uniqueness",
         "referential",
@@ -230,9 +227,11 @@ class ValidationSuite:
     ) -> SuiteResult:
         """Full pass. With a manifest, partitions are processed in ``n_waves``
         groups and each finished wave is checkpointed; ``resume=True`` skips
-        lineage-compatible completed partitions. If the input is physically
-        partitioned by ``part_id`` (see :meth:`with_partition`) the skip is
-        I/O-level — pruned directories are never read.
+        lineage-compatible completed partitions. The violations and verdicts
+        plans are built once per run, and each wave filters them to its
+        partitions. If the input is physically partitioned by ``part_id``
+        (see :meth:`with_partition`) that filter reaches the scan and the
+        skip is I/O-level — pruned directories are never read.
 
         ``output_dir``: per-wave DURABLE persistence. Each wave's violations
         and verdicts are written (dynamic partition overwrite keyed on the
@@ -281,18 +280,21 @@ class ValidationSuite:
         ] if n_waves > 1 else [todo]
         waves = [w for w in waves if w]
 
+        # built once: a wave only adds its partition predicate, so the suite
+        # is not re-analyzed and re-optimized per wave
+        viol_plan = self.violations(dfp, commits_dim).withColumn(
+            "run_id", F.lit(run_id)
+        )
+        verd_plan = self.drift_verdicts(dfp).withColumn("run_id", F.lit(run_id))
+
         caches: list[DataFrame] = []
         first_wave = True
         for wave in waves:
-            slice_df = dfp.where(F.col(PART).isin(wave))
-            if self.config.cache_waves:
-                slice_df = slice_df.cache()
-            viol = self.violations(slice_df, commits_dim).withColumn(
-                "run_id", F.lit(run_id)
-            ).cache()  # serves the persist + count actions below
-            verd = self.drift_verdicts(slice_df).withColumn(
-                "run_id", F.lit(run_id)
-            ).cache()  # tiny (O(partitions x features))
+            in_wave = F.col("partition").isin([str(p) for p in wave])
+            # cached: each serves the persist + count actions below (the
+            # verdicts are tiny, O(partitions x features))
+            viol = viol_plan.where(in_wave).cache()
+            verd = verd_plan.where(in_wave).cache()
             if output_dir is not None:
                 # a fresh (non-resume) run statically overwrites the sink on
                 # its first wave (clearing stale partitions from older runs);
@@ -345,14 +347,8 @@ class ValidationSuite:
                     verd if verdicts_out is None else verdicts_out.unionByName(verd)
                 )
                 caches += [viol, verd]
-            slice_df.unpersist()
 
-        verd_schema = (
-            "partition string, feature string, kind string, psi double, ks double,"
-            " drift_detected boolean, drift_severity string, baseline_mean double,"
-            " current_mean double, mean_change_pct double, baseline_std double,"
-            " current_std double, n_samples long, run_id string"
-        )
+        verd_schema = VERDICT_SCHEMA + ", run_id string"
         if output_dir is not None:
             # authoritative outputs come from the durable sink: every wave of
             # this run plus skipped partitions recovered from prior runs

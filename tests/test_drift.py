@@ -81,7 +81,9 @@ def mirror_drift_verdicts(pdf: pd.DataFrame, snap: BaselineSnapshot,
                   values drop out); no row when no value hits the list;
                   mean = top-category share, n_samples = in-list count.
     binary      — the reference's proportion-difference test
-                  (drift_detector.py:203-225); no KS.
+                  (drift_detector.py:203-225); no KS. With no non-NULL
+                  value the proportion is NULL (SQL ``avg``), and so are
+                  psi, drift_detected and current_mean; severity is low.
     """
     out = {}
     for part, g in pdf.groupby(partition_col):
@@ -122,17 +124,20 @@ def mirror_drift_verdicts(pdf: pd.DataFrame, snap: BaselineSnapshot,
                 "n_samples": int(total),
             }
         for feat, bb in snap.binary.items():
-            prop = float(g[feat].dropna().astype(float).mean())
-            diff = abs(prop - bb.proportion_ones)
+            vals = g[feat].dropna().astype(float)
+            prop = None if vals.empty else float(vals.mean())
+            diff = None if prop is None else abs(prop - bb.proportion_ones)
             out[(part, feat)] = {
                 "partition": part, "feature": feat, "kind": "categorical_binary",
-                "psi": round(diff, 4), "ks": None,
-                "drift_detected": diff >= diff_threshold,
+                "psi": None if diff is None else round(diff, 4), "ks": None,
+                "drift_detected": None if diff is None else diff >= diff_threshold,
                 "drift_severity": (
-                    "high" if diff >= 0.2 else "medium" if diff >= 0.1 else "low"
+                    "low" if diff is None
+                    else "high" if diff >= 0.2 else "medium" if diff >= 0.1
+                    else "low"
                 ),
                 "baseline_mean": round(bb.proportion_ones, 4),
-                "current_mean": round(prop, 4),
+                "current_mean": None if prop is None else round(prop, 4),
                 "mean_change_pct": 0.0, "baseline_std": 0.0, "current_std": 0.0,
                 "n_samples": len(g),
             }
@@ -240,9 +245,13 @@ def test_psi_merged_not_averaged(spark, baseline_and_data):
 
 
 def _multi_feature_fixture(spark):
-    """3 numerical + 2 categorical + 1 binary features, 4 partitions, with
-    planted nulls on every kind and one partition (p3) whose categorical
-    values all miss the frozen list."""
+    """3 numerical + 2 categorical + 1 binary features, 7 partitions, with
+    planted nulls on every kind, one partition (p3) whose categorical
+    values all miss the frozen list, and three edge partitions whose
+    arithmetic must not throw under ANSI mode: p4 holds a single row
+    (n - 1 == 0 in the sample variance), every feature of p5 is NULL (no
+    values, all-zero counts), and p6's numerical values all fall outside
+    the baseline edges (every bucket count is 0)."""
     from mlops_drift_detection_spark.baseline import compute_baseline_auto
 
     rng = np.random.RandomState(7)
@@ -281,6 +290,19 @@ def _multi_feature_fixture(spark):
     cur.loc[61:90, "b1"] = None
     # p3: every lang value outside the frozen {py,go,rs} list
     cur.loc[cur["part"] == "p3", "lang"] = "zz"
+    out_of_range = [1e6 + i for i in range(5)]
+    edge = pd.DataFrame(
+        {
+            "part": ["p4"] + ["p5"] * 3 + ["p6"] * 5,
+            "ln": [100.0] + [None] * 3 + out_of_range,
+            "n2": [0.0] + [None] * 3 + out_of_range,
+            "n3": [5.0] + [None] * 3 + [-v for v in out_of_range],
+            "lang": ["py"] + [None] * 3 + ["go", "py", "rs", "go", "py"],
+            "src": ["x"] + [None] * 3 + ["x", "y", "x", "y", "x"],
+            "b1": [1.0] + [None] * 3 + [0.0, 1.0, 1.0, 0.0, 1.0],
+        }
+    )
+    cur = pd.concat([cur, edge], ignore_index=True)
     return snap, cur, spark.createDataFrame(cur)
 
 
@@ -294,9 +316,10 @@ def test_fused_n_feature_drift_identical_to_per_feature(spark):
     """fused_drift_verdicts equals the per-feature pandas mirror for every
     (partition, feature) of all three kinds, including the partition with
     no frozen-category hit, which emits no row for that categorical
-    feature. Rounded fields may differ by one unit in the last place
+    feature, and the three ANSI edge partitions. Rounded fields may differ by one unit in the last place
     (Spark rounds HALF_UP on the decimal string, Python on the binary
     value)."""
+    assert spark.conf.get("spark.sql.ansi.enabled") == "true"
     snap, cur_pdf, cur = _multi_feature_fixture(spark)
     got = {
         (r["partition"], r["feature"]): r.asDict()
@@ -320,6 +343,36 @@ def test_fused_n_feature_drift_identical_to_per_feature(spark):
     assert ("p3", "lang") not in got
     # ... but still emits its numerical + binary rows
     assert ("p3", "ln") in got and ("p3", "b1") in got
+    # the edge partitions are all checked above: the all-NULL one emits its
+    # numerical and binary rows only, the other two every feature
+    assert {k for k in got if k[0] == "p5"} == {
+        ("p5", f) for f in ("ln", "n2", "n3", "b1")
+    }
+    assert all((p, "lang") in got for p in ("p4", "p6"))
+    assert got[("p4", "ln")]["current_std"] == 0.0
+    assert got[("p6", "ln")]["psi"] == 0.0 and got[("p6", "ln")]["n_samples"] == 5
+
+
+def test_drift_plan_carries_one_psi_tree(spark):
+    """PSI is built once per row and projected once per verdict: ``ln(``
+    occurs once in the optimized plan of psi_expr and of the whole fused
+    kernel, although the verdict reads psi four times (value, alarm, and
+    twice in the severity ladder)."""
+    from pyspark.sql import functions as F
+
+    from mlops_drift_detection_spark.operators.psi import psi_expr
+
+    def optimized(df) -> str:
+        return df._jdf.queryExecution().optimizedPlan().toString()
+
+    arrays = spark.createDataFrame(
+        [([1.0, 2.0], [2.0, 1.0])], "e array<double>, a array<double>"
+    )
+    psi = arrays.select(psi_expr(F.col("e"), F.col("a")).alias("psi"))
+    assert optimized(psi).count("ln(") == 1
+    snap, _, cur = _multi_feature_fixture(spark)
+    verdicts = fused_drift_verdicts(cur, snap, partition_col="part")
+    assert optimized(verdicts).count("ln(") == 1
 
 
 def test_fused_n_feature_drift_single_scan(spark, tmp_path):

@@ -110,3 +110,12 @@ def test_all_audited_queries_have_expectations():
     minimum) — the audit cannot silently regress to presence-only checks."""
     for name, exp in EXPECTED.items():
         assert "scans" in exp and "exch" in exp, name
+
+
+def test_max_count_caps_repeated_fragments():
+    """A multi_feature_drift plan that re-inlines the PSI tree (one `ln(`
+    per use) fails its cap; a single occurrence passes."""
+    m = {"scans": 1, "exch": 3, "wgl": False, "cart": False, "bnlj": False}
+    assert check_invariants("multi_feature_drift", {**m, "full": "ln(x)"}) == []
+    bad = check_invariants("multi_feature_drift", {**m, "full": "ln(x) ln(y)"})
+    assert any("'ln('" in b for b in bad), bad

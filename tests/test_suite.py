@@ -196,6 +196,66 @@ def test_kill_resume_recovers_persisted_wave_rows(data, tmp_path):
     assert len(rid_old) == 1 and len(rid_new) == 1 and rid_old != rid_new
 
 
+def test_run_builds_one_plan_and_every_wave_stays_pruned(
+    data, spark, tmp_path, monkeypatch
+):
+    """The violations and verdicts plans are built once per run, not once per
+    wave, and each wave's persisted plan still reads only that wave's
+    directories: every code-files FileScan carries PartitionFilters naming
+    exactly the wave's part_ids."""
+    import re
+
+    from mlops_drift_detection_spark.datagen import with_part_id
+
+    _, cf, cm, baseline = data
+    path = str(tmp_path / "cf_part")
+    with_part_id(cf, 8).write.mode("overwrite").partitionBy("part_id").parquet(path)
+
+    calls = {"violations": 0, "drift_verdicts": 0}
+
+    def counting(name):
+        method = getattr(ValidationSuite, name)
+
+        def wrapper(self, *args, **kwargs):
+            calls[name] += 1
+            return method(self, *args, **kwargs)
+
+        return wrapper
+
+    for name in calls:
+        monkeypatch.setattr(ValidationSuite, name, counting(name))
+    plans: list[str] = []
+    persist = ValidationSuite._persist_wave
+
+    def capturing(df, out, dynamic):
+        plans.append(df._jdf.queryExecution().executedPlan().toString())
+        persist(df, out, dynamic)
+
+    monkeypatch.setattr(ValidationSuite, "_persist_wave", staticmethod(capturing))
+
+    suite = ValidationSuite(baseline, SuiteConfig(n_partition_buckets=8))
+    suite.run(
+        spark.read.parquet(path), cm, n_waves=4, output_dir=str(tmp_path / "out")
+    )
+    assert calls == {"violations": 1, "drift_verdicts": 1}
+
+    # waves take the sorted partition ids round-robin; each wave persists
+    # its violations, then its verdicts
+    waves = [{0, 4}, {1, 5}, {2, 6}, {3, 7}]
+    assert len(plans) == 2 * len(waves)
+    for i, plan in enumerate(plans):
+        scans = [
+            line for line in plan.splitlines()
+            if "FileScan parquet" in line and "part_id" in line
+        ]
+        assert scans, plan
+        for scan in scans:
+            filters = re.search(r"PartitionFilters: \[([^\]]*)\]", scan).group(1)
+            named = re.search(r"IN \(([^)]*)\)", filters)
+            assert named, scan
+            assert {int(v) for v in named.group(1).split(",")} == waves[i // 2]
+
+
 def test_physical_part_id_beyond_bucket_config_not_lost(data, spark, tmp_path):
     """ADVICE r2: an input written with MORE part_id buckets than the suite
     config must still have every row validated — the wave list derives from
@@ -251,7 +311,7 @@ def test_wave_caches_released_when_sink_present(data, tmp_path, spark):
     """VERDICT r2 #4: with an output sink, no wave cache survives run()."""
     _, cf, cm, baseline = data
     before = {r.id() for r in spark.sparkContext._jsc.sc().getRDDStorageInfo()}
-    suite = ValidationSuite(baseline, SuiteConfig(n_partition_buckets=4, cache_waves=False))
+    suite = ValidationSuite(baseline, SuiteConfig(n_partition_buckets=4))
     res = suite.run(cf, cm, output_dir=str(tmp_path / "out"), n_waves=2)
     after = {r.id() for r in spark.sparkContext._jsc.sc().getRDDStorageInfo()}
     assert after <= before, "run() leaked cached RDD blocks despite durable sink"

@@ -14,7 +14,9 @@ Two layers:
   new shuffle cannot sneak in silently), WindowGroupLimit presence for
   keep-min/top-k plans (the per-partition limit pushdown is the thing that
   makes them scale), required plan substrings (e.g. the split operators'
-  `__chunk` hash partitioning), and a global no-CartesianProduct rule.
+  `__chunk` hash partitioning), capped substring counts (e.g. one `ln(`
+  — one PSI tree — in the fused drift plan), and a global
+  no-CartesianProduct rule.
   `BroadcastNestedLoopJoin` is tolerated ONLY where recorded in EXPECTED
   (`bnlj=True`) — those are scalar 1-row broadcast crossJoins, audited by
   hand; an unexpected BNLJ anywhere else fails.
@@ -34,7 +36,8 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 # sf0.01 (round 5). scans/exch are EXACT counts over the plan-tree section;
 # wgl is WindowGroupLimit presence; bnlj=True whitelists the scalar 1-row
 # broadcast crossJoin that query is known to carry; "contains" are
-# substrings that must appear in the FULL formatted plan.
+# substrings that must appear in the FULL formatted plan; "max_count" maps a
+# substring to the most times it may appear there.
 EXPECTED: dict[str, dict] = {
     "stats_moments": {"scans": 1, "exch": 1},
     "histogram_nchars": {"scans": 1, "exch": 1},
@@ -56,7 +59,9 @@ EXPECTED: dict[str, dict] = {
     "embedding_neardup_lsh": {"scans": 4, "exch": 9, "bnlj": True},
     "ann_ivf_topk": {"scans": 4, "exch": 7, "wgl": True, "bnlj": True},
     "column_profile": {"scans": 1, "exch": 1},
-    "multi_feature_drift": {"scans": 1, "exch": 3},
+    # the PSI tree is projected once and read by the value, the alarm and
+    # the severity ladder: re-inlining it per use multiplies the plan size
+    "multi_feature_drift": {"scans": 1, "exch": 3, "max_count": {"ln(": 1}},
     "ann_ivf_trained_topk": {"scans": 8, "exch": 23, "wgl": True, "bnlj": True},
     "winnow_fingerprint_pairs": {"scans": 1, "exch": 2},
     "ngram_jaccard_join": {"scans": 4, "exch": 7},
@@ -339,6 +344,10 @@ def check_invariants(name: str, metrics: dict) -> list[str]:
     for sub in exp.get("not_contains", []):
         if sub in metrics["full"]:
             bad.append(f"forbidden plan fragment {sub!r} present")
+    for sub, most in exp.get("max_count", {}).items():
+        n = metrics["full"].count(sub)
+        if n > most:
+            bad.append(f"plan fragment {sub!r} appears {n} times > {most}")
     return bad
 
 
