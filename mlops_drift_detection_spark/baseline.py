@@ -7,14 +7,17 @@ Mirrors the reference's ``models/baseline_stats.json`` artifact
   bin edges (``pd.qcut(q=10, duplicates='drop')`` semantics: quantile edges
   with duplicate-edge drop, equal-width ``np.linspace`` fallback when <2 bins
   survive — baseline_calculator.py:81-93) plus per-bin counts.
+* per binary feature (a numerical column whose observed values are exactly
+  {0, 1}, baseline_calculator.py:48-58): the proportion of ones.
 * per categorical feature: the category list and per-category counts /
-  proportions (generalizing the reference's binary ``proportion_positive``
-  path, baseline_calculator.py:53-58).
+  proportions.
 
-The snapshot is tiny (KBs) regardless of input size — computed with ONE
-aggregate pass per feature batch, collected to the driver, persisted as JSON,
-and broadcast back to executors for the drift pass. At 100 TB the cost is the
-scan; everything after the partial aggregation is O(features x bins).
+The snapshot is tiny (KBs) regardless of input size. It takes two full-data
+passes for any feature count: one aggregate for the moments, quantile edges
+and binary flags, then the drift kernel's own count stage (``drift_counts``)
+for the bin and category counts. It is collected to the driver, persisted as
+JSON, and broadcast back to executors for the drift pass. At 100 TB the cost
+is the scan; everything after the partial aggregation is O(features x bins).
 """
 
 from __future__ import annotations
@@ -26,7 +29,7 @@ from dataclasses import dataclass, field
 from typing import Any
 
 import numpy as np
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 N_PSI_BINS = 10  # reference: baseline_calculator.py:73
@@ -132,20 +135,21 @@ def compute_baseline(
     exact_quantiles: bool = False,
     max_categories: int = 1000,
 ) -> BaselineSnapshot:
-    """Compute the snapshot in a bounded number of full-data passes.
+    """Compute the snapshot in two full-data passes, whatever the feature
+    count.
 
-    Pass 1: one ``agg`` computing count + moments + quantile edges for ALL
-    numerical columns at once (``percentile_approx`` returns the whole edge
-    array per column — no per-column jobs). Pass 2: one histogram job per
-    numerical column (each is a groupBy on a 10-value bucket key — cheap,
-    and Spark runs the scans off the same cached/columnar source). Pass 3:
-    one groupBy per categorical column.
+    Pass 1: one ``agg`` computing the row count and, for every numerical
+    column, its moments, quantile edges (``percentile_approx`` returns the
+    whole edge array per column — no per-column jobs), :func:`binary_flag`
+    and non-NULL count. A numerical column whose observed values are
+    exactly {0, 1} with no NULLs takes the binary-proportion path — the
+    reference's dispatch rule (baseline_calculator.py:48-50); every other
+    one gets :func:`qcut_edges` bins. Pass 2: :func:`fill_baseline_counts`
+    counts every bin and category in one :func:`drift_counts` job.
 
     ``exact_quantiles=True`` uses the exact ``percentile`` aggregate — for
     tests / small data; at 100 TB use the default approx path (rel. err 1e-4).
     """
-    from mlops_drift_detection_spark.operators.histogram import histogram_counts
-
     # one sorted grid: the 11 decile edges plus exact q25/q75 positions
     probs = sorted({i / N_PSI_BINS for i in range(N_PSI_BINS + 1)} | {0.25, 0.75})
     decile_idx = [probs.index(i / N_PSI_BINS) for i in range(N_PSI_BINS + 1)]
@@ -162,52 +166,90 @@ def compute_baseline(
             F.expr(
                 f"{pfunc}({c}, array({','.join(str(p) for p in probs)}){acc_arg})"
             ).alias(f"{c}__qs"),
+            binary_flag(F.col(c)).alias(f"{c}__bin"),
+            F.count(c).alias(f"{c}__nv"),
         ]
     row = df.agg(*aggs).collect()[0]
 
     snap = BaselineSnapshot(n_samples=int(row["__n"]))
     for c in numerical_cols:
+        if row[f"{c}__bin"]:
+            snap.binary[c] = BinaryBaseline(
+                proportion_ones=_f(row[f"{c}__mean"]), n=int(row[f"{c}__nv"])
+            )
+            continue
         qs = row[f"{c}__qs"]
         lo = float(row[f"{c}__min"]) if row[f"{c}__min"] is not None else 0.0
         hi = float(row[f"{c}__max"]) if row[f"{c}__max"] is not None else 0.0
         deciles = [float(qs[i]) for i in decile_idx] if qs else []
-        edges = qcut_edges(deciles, lo, hi)
-        counts_df = histogram_counts(df, c, edges)
-        counts_rows = counts_df.collect()
-        counts = (
-            [float(x) for x in counts_rows[0]["counts"]]
-            if counts_rows
-            else [0.0] * (len(edges) - 1)
-        )
-        std = row[f"{c}__std"]
         snap.numerical[c] = NumericalBaseline(
             mean=_f(row[f"{c}__mean"]),
-            std=_f(std),
+            std=_f(row[f"{c}__std"]),
             min=lo,
             max=hi,
             median=float(qs[probs.index(0.5)]) if qs else 0.0,
             q25=float(qs[probs.index(0.25)]) if qs else 0.0,
             q75=float(qs[probs.index(0.75)]) if qs else 0.0,
-            bins=edges,
-            counts=counts,
+            bins=qcut_edges(deciles, lo, hi),
+            counts=[],
         )
-
     for c in categorical_cols:
-        rows = (
-            df.where(F.col(c).isNotNull())
-            .groupBy(c)
-            .agg(F.count(F.lit(1)).alias("cnt"))
-            .orderBy(F.desc("cnt"), F.asc(c))
-            .limit(max_categories)
-            .collect()
-        )
-        total = sum(r["cnt"] for r in rows) or 1
-        snap.categorical[c] = CategoricalBaseline(
-            categories=[r[c] for r in rows],
-            counts=[float(r["cnt"]) for r in rows],
-            proportions=[r["cnt"] / total for r in rows],
-        )
+        snap.categorical[c] = CategoricalBaseline([], [], [])
+    fill_baseline_counts(df, snap, {c: max_categories for c in categorical_cols})
     return snap
+
+
+def fill_baseline_counts(
+    df: DataFrame, snap: BaselineSnapshot, max_categories: dict[str, int]
+) -> None:
+    """Pass 2 of a baseline, in place: every numerical feature's per-bin
+    counts over its ``bins``, and every categorical feature's top
+    ``max_categories[feature]`` values (count desc, value asc) with counts
+    and proportions. One :func:`drift_counts` job over ``snap``'s numerical
+    and categorical features.
+
+    NULL, NaN and out-of-range numerical values fall in no bin, and NULL
+    categories are not counted (pd.cut / value_counts semantics). The top-k
+    is ranked in Spark, so only k values per feature reach the driver.
+    Categories are compared and returned as strings, as the drift kernel
+    reads them.
+    """
+    from mlops_drift_detection_spark.operators.drift import _NULL_KEY, drift_counts
+
+    if not (snap.numerical or snap.categorical):
+        return
+    numerical = list(snap.numerical)
+    is_num = F.col("__f").isin(numerical) if numerical else F.lit(False)
+    counted = drift_counts(
+        df, BaselineSnapshot(snap.n_samples, snap.numerical, snap.categorical)
+    ).where(F.when(is_num, F.col("__k") != "-1").otherwise(F.col("__k") != _NULL_KEY))
+    rank = F.row_number().over(
+        Window.partitionBy("__f").orderBy(F.desc("__cnt"), F.asc("__k"))
+    )
+    cap = F.lit(0)
+    for c, k in max_categories.items():
+        cap = F.when(F.col("__f") == c, k).otherwise(cap)
+    rows = (
+        counted.select("__f", "__k", "__cnt", rank.alias("__rn"))
+        .where(is_num | (F.col("__rn") <= cap))
+        .collect()
+    )
+
+    by_feature: dict[str, list] = {}
+    for r in sorted(rows, key=lambda r: r["__rn"]):
+        by_feature.setdefault(r["__f"], []).append((r["__k"], r["__cnt"]))
+    for c, nb in snap.numerical.items():
+        nb.counts = [0.0] * (len(nb.bins) - 1)
+        for k, n in by_feature.get(c, []):
+            nb.counts[int(k)] = float(n)
+    for c in snap.categorical:
+        top = by_feature.get(c, [])
+        total = sum(n for _k, n in top) or 1
+        snap.categorical[c] = CategoricalBaseline(
+            categories=[k for k, _n in top],
+            counts=[float(n) for _k, n in top],
+            proportions=[n / total for _k, n in top],
+        )
 
 
 def _f(x) -> float:
@@ -218,7 +260,7 @@ def _f(x) -> float:
 
 
 # ---------------------------------------------------------------------------
-# SO2: data-driven binary-categorical dispatch + degenerate-bin compat mode
+# SO2: data-driven binary-categorical dispatch
 # ---------------------------------------------------------------------------
 
 def binary_flag(c: Column) -> Column:
@@ -244,47 +286,3 @@ def detect_binary_columns(df: DataFrame, cols: list[str]) -> dict[str, bool]:
         *[binary_flag(F.col(c)).alias(f"__b_{c}") for c in cols]
     ).collect()[0]
     return {c: bool(row[f"__b_{c}"]) for c in cols}
-
-
-def compute_baseline_auto(
-    df: DataFrame,
-    feature_cols: list[str],
-    categorical_cols: list[str] | None = None,
-    exact_quantiles: bool = False,
-    degenerate_bins_compat: bool = False,
-) -> BaselineSnapshot:
-    """Baseline with the reference's DATA-DRIVEN type dispatch: a feature
-    column whose observed values are exactly {0,1} takes the binary
-    proportion path; everything else is numerical. String columns go in
-    ``categorical_cols`` explicitly (the reference has none at this stage).
-
-    ``degenerate_bins_compat=True`` reproduces the SHIPPED reference
-    artifact's behavior (SURVEY §1.3/§7): because StandardScaler ran before
-    baseline computation there, no column is 0/1 anymore — every would-be
-    binary column falls through to the numerical qcut path, whose duplicate
-    -edge drop leaves a degenerate 2-edge/1-count bin set, so PSI on it is
-    ~0 and binary drift is UNDETECTABLE. Keep it off ("native" mode) for a
-    working engine; turn it on only to reproduce reference verdicts
-    bit-for-bit against the shipped baseline_stats.json."""
-    flags = (
-        {c: False for c in feature_cols}
-        if degenerate_bins_compat
-        else detect_binary_columns(df, feature_cols)
-    )
-    numerical = [c for c in feature_cols if not flags[c]]
-    snap = compute_baseline(
-        df, numerical, list(categorical_cols or []), exact_quantiles=exact_quantiles
-    )
-    binary_cols = [c for c in feature_cols if flags[c]]
-    if binary_cols:
-        row = df.agg(
-            *[F.avg(F.col(c).cast("double")).alias(f"__p_{c}") for c in binary_cols],
-            *[F.count(c).alias(f"__n_{c}") for c in binary_cols],
-        ).collect()[0]
-        for c in binary_cols:
-            snap.binary[c] = BinaryBaseline(
-                proportion_ones=_f(row[f"__p_{c}"]), n=int(row[f"__n_{c}"])
-            )
-    return snap
-
-

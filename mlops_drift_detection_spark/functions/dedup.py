@@ -258,6 +258,16 @@ def ngram_jaccard(
     )
 
 
+def _check_threshold(threshold: float) -> None:
+    """Similarity thresholds live in (0, 1]: above 1 the prefix length
+    ``|x| - ceil(t*|x|) + 1`` drops to <= 0 (Spark's ``slice`` then fails
+    with an unnamed error), and at or below 0 pairs sharing no gram would
+    qualify but are never candidates, so they would be silently missed.
+    NaN fails too."""
+    if not 0.0 < threshold <= 1.0:
+        raise ValueError(f"threshold must be in (0, 1], got {threshold!r}")
+
+
 def prefix_filter_jaccard_join(
     df: DataFrame,
     text_col: str,
@@ -293,6 +303,7 @@ def prefix_filter_jaccard_join(
     and ``max_token_bucket`` caps explicitly; audit what a cap drops with
     :func:`prefix_bucket_stats` so truncation is never silent.
     """
+    _check_threshold(threshold)
     sets = df.select(
         F.col(id_col).alias("id"),
         F.array_distinct(shingles(F.col(text_col), n)).alias("grams"),
@@ -339,6 +350,7 @@ def prefix_bucket_stats(
     """(gram, size) for prefix-gram buckets a cap would drop — the audit twin
     of ``max_token_bucket`` in :func:`prefix_filter_jaccard_join` (same
     pattern as ``oversized_bucket_stats`` for minhash)."""
+    _check_threshold(threshold)
     sets = df.select(
         F.col(id_col).alias("id"),
         F.array_distinct(shingles(F.col(text_col), n)).alias("grams"),
@@ -406,6 +418,7 @@ def containment_prefix_join(
     cap; prefix theory keeps probe(g) small because a gram only enters a
     prefix when rare-for-its-doc) -> distinct candidates -> two set joins
     for exact verification. No self-join of the corpus ever happens."""
+    _check_threshold(threshold)
     sets = df.select(
         F.col(id_col).alias("id"),
         F.array_distinct(shingles(F.col(text_col), n)).alias("grams"),

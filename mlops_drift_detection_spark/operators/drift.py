@@ -13,7 +13,9 @@ multi-aggregate job (:func:`fused_drift_verdicts`):
                (drift_detector.py:203-225) from the same moment sums.
 
 Baseline count vectors ride a tiny broadcast spec table; the only full-data
-work is the scan + one shuffle keyed on (partition, feature, key). PSI is
+work is the scan + one shuffle keyed on (partition, feature, key) — the
+count stage :func:`drift_counts`, which ``baseline.compute_baseline`` also
+uses to count the snapshot it freezes. PSI is
 always computed on MERGED histograms — never averaged across partitions
 (PSI does not decompose).
 
@@ -44,53 +46,38 @@ VERDICT_SCHEMA = (
 )
 
 # Sentinel for NULL category values inside the fused (feature, key) explode.
-# Never read back: the dense count vector indexes only the frozen category
-# list, so the sentinel drops out like any unknown category.
+# Never read back: the verdict's dense count vector indexes only the frozen
+# category list, and the baseline's count pass drops the key.
 _NULL_KEY = "\x00__null__"
 _BIN_KEY = "__bin__"
 
 
-def fused_drift_verdicts(
+def drift_counts(
     df: DataFrame,
     baseline: BaselineSnapshot,
     partition_col: str | None = None,
-    psi_threshold: float = PSI_ALARM_THRESHOLD,
-    binary_diff_threshold: float = 0.1,
 ) -> DataFrame:
-    """EVERY baseline feature's drift verdict from ONE scan of ``df``.
+    """The drift kernel's count stage: ONE scan and ONE shuffle of ``df``
+    giving ``(partition, __f, __k, __cnt, __cnt_val, __sum, __sum2)`` rows.
 
-    The reference's flagship pass is 51 features per drift request
-    (drift_detector.py:236-293) — run one at a time in pandas there, and
-    SURVEY §2.10 mandates the loop "compiles into ONE multi-agg job, not N
-    jobs" here. This is that job, with no per-feature branches at all:
+    Each row of ``df`` is projected to one (feature, key, value) entry per
+    baseline feature and exploded:
 
-      1. project each row to an array of (feature, key, value) structs —
-         key = frozen-edge bucket index for numerical features (NULL/out-of
-         -range -> "-1"), the category value for categorical features
-         (NULL -> a sentinel that the dense read below never indexes), a
-         constant for binary features — and ``explode`` it;
-      2. ONE shuffle: groupBy(partition, feature, key) with map-side
-         combine — reduce-side state is O(partitions x sum(keys per
-         feature)), independent of row count;
-      3. a tiny second aggregate assembles each (partition, feature)'s
-         sparse key->count map plus moment sums;
-      4. a broadcast join against the baseline spec (feature, kind, frozen
-         key list, expected counts, mean/std — KBs for any feature count)
-         densifies the counts, projects PSI and KS once each, and derives
-         the moments and verdict fields in one kind-switched projection.
+      numerical   key = bucket index against the frozen edges (pd.cut
+                  semantics, histogram.py); NULL/NaN/out-of-range -> "-1";
+      categorical key = the raw value cast to string (NULL -> a sentinel);
+                  the frozen category list is NOT applied here, so the
+                  baseline can count every observed value;
+      binary      key = a constant.
 
-    A partition whose rows all miss a feature's frozen category list (or
-    are all NULL) emits NO row for that categorical feature: there is no
-    in-list count to compare. Numerical and binary features always emit a
-    row per partition. ``tests/test_drift.py`` checks every row against an
-    independent pandas/numpy mirror of these semantics.
-
-    At 100 TB and 51 features this replaces 51 scans + 51 shuffles with one
-    scan + one full-data shuffle; everything after step 2 is metadata-sized.
+    Then ``groupBy(partition, __f, __k)`` with map-side combine counts rows
+    (``__cnt``), non-NULL values (``__cnt_val``) and the value moment sums.
+    Reduce-side state is O(partitions x sum(keys per feature)), independent
+    of row count, and the rows merge by plain addition.
     """
     num_feats = list(baseline.numerical.items())
-    cat_feats = list(baseline.categorical.items())
-    bin_feats = list(baseline.binary.items())
+    cat_feats = list(baseline.categorical)
+    bin_feats = list(baseline.binary)
     if not (num_feats or cat_feats or bin_feats):
         raise ValueError("baseline has no features")
     part = (
@@ -109,7 +96,7 @@ def fused_drift_verdicts(
                 v.alias("v"),
             )
         )
-    for feat, _cb in cat_feats:
+    for feat in cat_feats:
         entries.append(
             F.struct(
                 F.lit(feat).alias("f"),
@@ -117,7 +104,7 @@ def fused_drift_verdicts(
                 F.lit(None).cast("double").alias("v"),
             )
         )
-    for feat, _bb in bin_feats:
+    for feat in bin_feats:
         entries.append(
             F.struct(
                 F.lit(feat).alias("f"),
@@ -134,12 +121,51 @@ def fused_drift_verdicts(
         F.col("e.k").alias("__k"),
         F.col("e.v").alias("__v"),
     )
-    micro = proj.groupBy("partition", "__f", "__k").agg(
+    return proj.groupBy("partition", "__f", "__k").agg(
         F.count(F.lit(1)).alias("__cnt"),
         F.count("__v").alias("__cnt_val"),
         F.sum("__v").alias("__sum"),
         F.sum(F.col("__v") * F.col("__v")).alias("__sum2"),
     )
+
+
+def fused_drift_verdicts(
+    df: DataFrame,
+    baseline: BaselineSnapshot,
+    partition_col: str | None = None,
+    psi_threshold: float = PSI_ALARM_THRESHOLD,
+    binary_diff_threshold: float = 0.1,
+) -> DataFrame:
+    """EVERY baseline feature's drift verdict from ONE scan of ``df``.
+
+    The reference's flagship pass is 51 features per drift request
+    (drift_detector.py:236-293) — run one at a time in pandas there, and
+    SURVEY §2.10 mandates the loop "compiles into ONE multi-agg job, not N
+    jobs" here. This is that job, with no per-feature branches at all:
+
+      1-2. :func:`drift_counts`: project each row to one (feature, key,
+         value) entry per feature, ``explode``, and count in ONE shuffle
+         on (partition, feature, key) with map-side combine;
+      3. a tiny second aggregate assembles each (partition, feature)'s
+         sparse key->count map plus moment sums;
+      4. a broadcast join against the baseline spec (feature, kind, frozen
+         key list, expected counts, mean/std — KBs for any feature count)
+         densifies the counts, projects PSI and KS once each, and derives
+         the moments and verdict fields in one kind-switched projection.
+
+    A partition whose rows all miss a feature's frozen category list (or
+    are all NULL) emits NO row for that categorical feature: there is no
+    in-list count to compare. Numerical and binary features always emit a
+    row per partition. ``tests/test_drift.py`` checks every row against an
+    independent pandas/numpy mirror of these semantics.
+
+    At 100 TB and 51 features this replaces 51 scans + 51 shuffles with one
+    scan + one full-data shuffle; everything after step 2 is metadata-sized.
+    """
+    micro = drift_counts(df, baseline, partition_col)
+    num_feats = list(baseline.numerical.items())
+    cat_feats = list(baseline.categorical.items())
+    bin_feats = list(baseline.binary.items())
     per_feature = micro.groupBy("partition", "__f").agg(
         F.map_from_arrays(
             F.collect_list("__k"), F.collect_list("__cnt")

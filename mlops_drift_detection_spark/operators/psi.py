@@ -8,13 +8,15 @@ Reference-exact PSI semantics (reference: src/monitoring/drift_detector.py:43-85
 * PSI = sum((a_p - e_p) * ln(a_p / e_p))
 * NaN or Inf result -> 0.0
 
-Two implementations with identical results:
+Two entry points with identical results (pytest-asserted):
 
-* :func:`psi_from_counts` — numpy, driver-side / test oracle.
 * :func:`psi_expr` — a native Spark ``Column`` over two ``array<double>`` count
   columns. Runs entirely JVM-side via ``aggregate``/``zip_with``; this is what
   the distributed drift pass uses, so PSI on a billion-group table is one
   whole-stage-codegen projection over merged histogram arrays, never Python.
+* :func:`psi_from_counts` — numpy on the driver, for the streaming
+  micro-batch verdicts (a handful of categories per batch, already counted
+  by Spark).
 
 The critical scale rule (SURVEY.md §7): histograms are merged across
 partitions FIRST, then PSI is computed on the merged vector. Never average
@@ -121,32 +123,6 @@ def psi_severity_expr(psi: Column) -> Column:
     )
 
 
-def psi_severity(psi: float) -> str:
-    if psi < 0.1:
-        return "low"
-    if psi < 0.2:
-        return "medium"
-    return "high"
-
-
-def ks_from_counts(
-    expected_counts: Sequence[float], actual_counts: Sequence[float]
-) -> float:
-    """Two-sample KS statistic on binned CDFs.
-
-    The reference *names* KS but never computes it (drift_detector.py:131-134
-    falls back to PSI); the north_star requires a real one. On binned data the
-    KS statistic is max |CDF_e(b) - CDF_a(b)| over bin boundaries.
-    """
-    expected = np.asarray(expected_counts, dtype=float)
-    actual = np.asarray(actual_counts, dtype=float)
-    if expected.sum() == 0 or actual.sum() == 0:
-        return 0.0
-    e_cdf = np.cumsum(expected) / expected.sum()
-    a_cdf = np.cumsum(actual) / actual.sum()
-    return float(np.max(np.abs(e_cdf - a_cdf)))
-
-
 def _cdf_array(arr: Column, total: Column) -> Column:
     """Running-sum CDF array of a count array, shared by the KS and
     Wasserstein exprs: aggregate into a (running_total, array_of_cdf)
@@ -223,26 +199,6 @@ def ks_expr(expected_counts: Column, actual_counts: Column) -> Column:
             )
         ),
     )
-
-
-def wasserstein_from_counts(
-    expected_counts: Sequence[float],
-    actual_counts: Sequence[float],
-    widths: Sequence[float],
-) -> float:
-    """NumPy twin of :func:`wasserstein_expr` (test oracle): binned W1 =
-    sum_i |CDF_e(i) - CDF_a(i)| * width_i; either side empty, or any size
-    mismatch between the three arrays, -> 0.0 (same rule as the expr)."""
-    expected = np.asarray(expected_counts, dtype=float)
-    actual = np.asarray(actual_counts, dtype=float)
-    w = np.asarray(widths, dtype=float)
-    if len(expected) != len(actual) or len(expected) != len(w):
-        return 0.0
-    if expected.sum() == 0 or actual.sum() == 0:
-        return 0.0
-    e_cdf = np.cumsum(expected) / expected.sum()
-    a_cdf = np.cumsum(actual) / actual.sum()
-    return float(np.sum(np.abs(e_cdf - a_cdf) * w))
 
 
 def wasserstein_expr(

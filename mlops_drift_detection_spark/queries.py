@@ -2246,7 +2246,7 @@ def q_streaming_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     replayed as a file-source stream (one micro-batch per source's file,
     availableNow trigger, checkpointed offsets) and validated per batch by
     ``foreach_batch_validator`` — the engine's production streaming topology
-    (readStream -> foreachBatch -> drift kernel).
+    (readStream -> foreachBatch category counts -> PSI).
 
     Verdicts are keyed by the rows' ``source``, i.e. by DATA rather than
     batch number, with NO layout precondition (VERDICT r4 #2): per-batch

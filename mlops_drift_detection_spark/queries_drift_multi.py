@@ -34,9 +34,9 @@ from mlops_drift_detection_spark.baseline import (
     BinaryBaseline,
     CategoricalBaseline,
     NumericalBaseline,
+    fill_baseline_counts,
 )
 from mlops_drift_detection_spark.operators.drift import fused_drift_verdicts
-from mlops_drift_detection_spark.operators.histogram import bucket_expr_native
 
 # (name, duckdb expression, frozen bin edges)
 MFD_NUM: list[tuple[str, str, list[float]]] = [
@@ -116,20 +116,19 @@ def _spark_feats(docs: DataFrame) -> DataFrame:
 
 
 def _mfd_baseline(feats: DataFrame) -> BaselineSnapshot:
-    """Even-half baseline for all 11 features: ONE aggregate pass for the
-    numerical moments + histogram counts + binary proportions, plus one tiny
-    groupBy per categorical feature (frozen list, count desc / value asc)."""
+    """Even-half baseline for all 11 features over the fixed MFD_NUM edges:
+    ONE aggregate pass for the numerical moments and binary proportions,
+    then the baseline's count pass (``fill_baseline_counts``: one
+    ``drift_counts`` job) for the bin counts and the frozen category lists
+    (count desc / value asc)."""
     even = feats.where(F.col("doc_id") % 2 == 0)
     aggs = []
-    for name, _sql, edges in MFD_NUM:
+    for name, _sql, _edges in MFD_NUM:
         c = F.col(name)
         aggs += [
             F.avg(c).alias(f"{name}__mean"),
             F.stddev_samp(c).alias(f"{name}__std"),
         ]
-        b = bucket_expr_native(c, edges)
-        for i in range(len(edges) - 1):
-            aggs.append(F.sum(F.when(b == i, 1).otherwise(0)).alias(f"{name}__c{i}"))
     for name, _sql in MFD_BIN:
         aggs += [
             F.avg(F.col(name)).alias(f"{name}__p"),
@@ -148,23 +147,11 @@ def _mfd_baseline(feats: DataFrame) -> BaselineSnapshot:
             q25=0.0,
             q75=0.0,
             bins=list(edges),
-            counts=[float(row[f"{name}__c{i}"]) for i in range(len(edges) - 1)],
+            counts=[],
         )
-    for name, _sql, maxc in MFD_CAT:
-        rows = (
-            even.where(F.col(name).isNotNull())
-            .groupBy(name)
-            .agg(F.count(F.lit(1)).alias("cnt"))
-            .orderBy(F.desc("cnt"), F.asc(name))
-            .limit(maxc)
-            .collect()
-        )
-        total = sum(r["cnt"] for r in rows) or 1
-        snap.categorical[name] = CategoricalBaseline(
-            categories=[r[name] for r in rows],
-            counts=[float(r["cnt"]) for r in rows],
-            proportions=[r["cnt"] / total for r in rows],
-        )
+    for name, _sql, _maxc in MFD_CAT:
+        snap.categorical[name] = CategoricalBaseline([], [], [])
+    fill_baseline_counts(even, snap, {name: maxc for name, _sql, maxc in MFD_CAT})
     for name, _sql in MFD_BIN:
         snap.binary[name] = BinaryBaseline(
             proportion_ones=float(row[f"{name}__p"] or 0.0), n=int(row[f"{name}__n"])

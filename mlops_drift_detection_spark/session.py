@@ -40,8 +40,8 @@ def get_spark(
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         # Arrow transfer for the Python batch paths: media decode
-        # (mapInPandas), the streaming state (applyInPandasWithState), the
-        # fixture generator, and pandas <-> DataFrame conversion.
+        # (mapInPandas), the fixture generator, and pandas <-> DataFrame
+        # conversion.
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "10000")
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))

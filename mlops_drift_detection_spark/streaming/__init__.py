@@ -1,6 +1,4 @@
 from mlops_drift_detection_spark.streaming.drift_stream import (  # noqa: F401
     foreach_batch_validator,
     run_file_stream_validation,
-    stateful_lang_drift,
-    windowed_profile,
 )

@@ -111,7 +111,111 @@ def test_qcut_edges_unit():
 
 
 # --------------------------------------------------------------------------
-# SO2: data-driven binary dispatch + degenerate-bin compat mode
+# Adversarial inputs: snapshots pinned from the per-column histogram loop
+# the two-pass baseline replaced
+# --------------------------------------------------------------------------
+
+_DEGENERATE_NUM = {
+    "mean": 0.0, "std": 0.0, "min": 0.0, "max": 0.0, "median": 0.0,
+    "q25": 0.0, "q75": 0.0, "bins": [0.0, 0.0], "counts": [0.0],
+}
+_NO_CATEGORIES = {"categories": [], "counts": [], "proportions": []}
+
+
+@pytest.mark.parametrize(
+    "rows,want",
+    [
+        pytest.param(
+            [],
+            {
+                "n_samples": 0,
+                "numerical": {"x": _DEGENERATE_NUM},
+                "categorical": {"c": _NO_CATEGORIES},
+                "binary": {},
+            },
+            id="empty_table",
+        ),
+        pytest.param(
+            [(None, "a"), (None, "b"), (None, "a")],
+            {
+                "n_samples": 3,
+                "numerical": {"x": _DEGENERATE_NUM},
+                "categorical": {
+                    "c": {
+                        "categories": ["a", "b"],
+                        "counts": [2.0, 1.0],
+                        "proportions": [0.6666666666666666, 0.3333333333333333],
+                    }
+                },
+                "binary": {},
+            },
+            id="all_null_numerical",
+        ),
+        pytest.param(
+            [(1.0, None), (2.0, None), (5.0, None)],
+            {
+                "n_samples": 3,
+                "numerical": {
+                    "x": {
+                        "mean": 2.6666666666666665, "std": 2.081665999466133, "min": 1.0,
+                        "max": 5.0, "median": 2.0, "q25": 1.0, "q75": 5.0,
+                        "bins": [1.0, 2.0, 5.0], "counts": [2.0, 1.0],
+                    }
+                },
+                "categorical": {"c": _NO_CATEGORIES},
+                "binary": {},
+            },
+            id="all_null_categorical",
+        ),
+    ],
+)
+def test_adversarial_snapshots_unchanged(spark, rows, want):
+    df = spark.createDataFrame(rows, "x double, c string")
+    assert compute_baseline(df, ["x"], ["c"]).to_dict() == want
+
+
+def _jobs_and_result(spark, group: str, fn):
+    """(number of Spark jobs ``fn`` ran, its result), via a job group."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, "job count")
+    try:
+        result = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return len(sc.statusTracker().getJobIdsForGroup(group)), result
+
+
+@pytest.mark.parametrize("n_num,n_bin", [(1, 0), (40, 11)], ids=["2", "51"])
+def test_compute_baseline_job_count(spark, n_num, n_bin):
+    """Two passes whatever the feature count: at most 5 Spark jobs (AQE
+    submits each shuffle stage as its own job) for 2 and for 51 features.
+    The per-column histogram loop this replaced ran 7 and 157 here."""
+    rng = np.random.RandomState(3)
+    n = 2000
+    pdf = pd.DataFrame(
+        {
+            **{f"n{i}": rng.lognormal(3, 1, n) for i in range(n_num)},
+            **{f"b{i}": (rng.uniform(size=n) < 0.3).astype(float) for i in range(n_bin)},
+            "cat": rng.choice(["a", "b", "c"], n),
+        }
+    )
+    df = spark.createDataFrame(pdf).cache()
+    df.count()
+    feats = [c for c in pdf.columns if c != "cat"]
+    try:
+        jobs, snap = _jobs_and_result(
+            spark, f"baseline-{n_num}-{n_bin}",
+            lambda: compute_baseline(df, feats, ["cat"]),
+        )
+    finally:
+        df.unpersist()
+    assert jobs <= 5
+    assert len(snap.numerical) == n_num and len(snap.binary) == n_bin
+    assert snap.categorical["cat"].categories != []
+
+
+# --------------------------------------------------------------------------
+# SO2: data-driven binary dispatch
 # --------------------------------------------------------------------------
 
 def _dispatch_df(spark, shift=False):
@@ -147,22 +251,21 @@ def test_detect_binary_columns(spark):
     }
 
 
-def test_compute_baseline_auto_dispatch(spark):
-    from mlops_drift_detection_spark.baseline import compute_baseline_auto
-
+def test_compute_baseline_binary_dispatch(spark):
     df = _dispatch_df(spark)
-    snap = compute_baseline_auto(df, ["num", "bin01"], exact_quantiles=True)
-    assert "bin01" in snap.binary and "bin01" not in snap.numerical
-    assert "num" in snap.numerical
+    snap = compute_baseline(
+        df, ["num", "bin01", "tri", "const0", "bin_null"], [], exact_quantiles=True
+    )
+    assert set(snap.binary) == {"bin01"}
+    assert set(snap.numerical) == {"num", "tri", "const0", "bin_null"}
     prop = snap.binary["bin01"].proportion_ones
     assert 0.1 < prop < 0.3
+    assert snap.binary["bin01"].n == 400
 
 
 def test_binary_snapshot_roundtrip(spark, tmp_path):
-    from mlops_drift_detection_spark.baseline import compute_baseline_auto
-
-    snap = compute_baseline_auto(
-        _dispatch_df(spark), ["num", "bin01"], exact_quantiles=True
+    snap = compute_baseline(
+        _dispatch_df(spark), ["num", "bin01"], [], exact_quantiles=True
     )
     p = str(tmp_path / "b.json")
     snap.save(p)
@@ -171,27 +274,34 @@ def test_binary_snapshot_roundtrip(spark, tmp_path):
 
 
 def test_degenerate_bins_compat_reproduces_reference_blindspot(spark):
-    """The SHIPPED reference artifact's bug, behind the flag (SURVEY §1.3/§7):
-    compat mode routes a 0/1 column down the numerical qcut path, whose
-    duplicate-edge drop leaves 2-edge/1-count bins -> PSI ~ 0 even under a
-    massive proportion shift (drift UNDETECTABLE); native mode's proportion
-    test alarms on the same shift."""
-    from mlops_drift_detection_spark.baseline import compute_baseline_auto
+    """The SHIPPED reference artifact's bug (SURVEY §1.3/§7): StandardScaler
+    ran before the baseline there, so a 0/1 column is no longer {0,1} and
+    takes the numerical qcut path, whose duplicate-edge drop leaves a
+    2-edge/1-count bin set -> PSI ~ 0 even under a massive proportion shift
+    (drift UNDETECTABLE). The unscaled column takes the binary path, whose
+    proportion test alarms on the same shift."""
     from mlops_drift_detection_spark.operators.drift import fused_drift_verdicts
 
     base_df = _dispatch_df(spark, shift=False)
     drifted_df = _dispatch_df(spark, shift=True)  # 0.2 -> 0.8 proportion of 1s
 
-    compat = compute_baseline_auto(
-        base_df, ["bin01"], exact_quantiles=True, degenerate_bins_compat=True
-    )
-    assert "bin01" in compat.numerical and not compat.binary
-    nb = compat.numerical["bin01"]
-    assert nb.bins == [0.0, 1.0]  # degenerate 2-edge/1-count set
-    compat_verdicts = fused_drift_verdicts(drifted_df, compat).collect()
-    assert all(not r["drift_detected"] for r in compat_verdicts)  # blind
+    # the reference's scaler: fit on the baseline, applied to both
+    base_pdf = base_df.select("bin01").toPandas()
+    mu, sd = base_pdf["bin01"].mean(), base_pdf["bin01"].std(ddof=0)
 
-    native = compute_baseline_auto(base_df, ["bin01"], exact_quantiles=True)
+    def scaled(df):
+        return df.select(((df["bin01"] - float(mu)) / float(sd)).alias("bin01"))
+
+    blind = compute_baseline(scaled(base_df), ["bin01"], [], exact_quantiles=True)
+    assert "bin01" in blind.numerical and not blind.binary
+    nb = blind.numerical["bin01"]
+    assert len(nb.bins) == 2 and len(nb.counts) == 1  # degenerate 1-bin set
+    blind_verdicts = fused_drift_verdicts(scaled(drifted_df), blind).collect()
+    assert len(blind_verdicts) == 1
+    assert blind_verdicts[0]["psi"] == 0.0
+    assert not blind_verdicts[0]["drift_detected"]  # blind
+
+    native = compute_baseline(base_df, ["bin01"], [], exact_quantiles=True)
     native_verdicts = fused_drift_verdicts(drifted_df, native).collect()
     assert len(native_verdicts) == 1
     r = native_verdicts[0]

@@ -244,6 +244,20 @@ def test_prefix_filter_cap_drops_boilerplate_only(spark):
     assert audit and all(r["size"] == 40 for r in audit)
 
 
+@pytest.mark.parametrize("threshold", [0.0, -0.1, 1.5, float("nan")])
+@pytest.mark.parametrize(
+    "join",
+    [D.prefix_filter_jaccard_join, D.containment_prefix_join, D.prefix_bucket_stats],
+    ids=lambda f: f.__name__,
+)
+def test_prefix_joins_reject_threshold_outside_unit_interval(docs, join, threshold):
+    """Above 1 the prefix length goes non-positive and ``slice`` fails
+    with an unnamed error; at or below 0 gram-disjoint pairs qualify but are
+    never candidates. Both must fail loudly, naming the argument."""
+    with pytest.raises(ValueError, match="threshold"):
+        join(docs, "text", "id", threshold)
+
+
 def test_band_bucket_keys_match_hof_formulation(spark):
     """The explode+agg band keys (codegen path) are bit-identical to the
     per-row higher-order-function formulation they replaced — including the

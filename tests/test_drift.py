@@ -7,6 +7,7 @@ the oracles here are pandas/numpy and share no Spark code with it."""
 import numpy as np
 import pandas as pd
 import pytest
+from numpy_oracles import histogram_from_values, ks_from_counts, psi_severity
 
 from mlops_drift_detection_spark.baseline import (
     BaselineSnapshot,
@@ -17,12 +18,7 @@ from mlops_drift_detection_spark.operators.drift import (
     drift_summary,
     fused_drift_verdicts,
 )
-from mlops_drift_detection_spark.operators.histogram import histogram_from_values
-from mlops_drift_detection_spark.operators.psi import (
-    ks_from_counts,
-    psi_from_counts,
-    psi_severity,
-)
+from mlops_drift_detection_spark.operators.psi import psi_from_counts
 
 RNG = np.random.RandomState(42)
 
@@ -252,8 +248,6 @@ def _multi_feature_fixture(spark):
     (n - 1 == 0 in the sample variance), every feature of p5 is NULL (no
     values, all-zero counts), and p6's numerical values all fall outside
     the baseline edges (every bucket count is 0)."""
-    from mlops_drift_detection_spark.baseline import compute_baseline_auto
-
     rng = np.random.RandomState(7)
     n = 4000
     base = pd.DataFrame(
@@ -268,10 +262,10 @@ def _multi_feature_fixture(spark):
             "b1": rng.randint(0, 2, n),
         }
     )
-    snap = compute_baseline_auto(
+    snap = compute_baseline(
         spark.createDataFrame(base),
         ["ln", "n2", "n3", "b1"],
-        categorical_cols=["lang", "src"],
+        ["lang", "src"],
         exact_quantiles=True,
     )
     cur = pd.DataFrame(

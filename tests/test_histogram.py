@@ -1,13 +1,13 @@
-"""Histogram bucketing vs pd.cut oracle (drift_detector.py:115-126 semantics)."""
+"""Histogram bucketing vs pd.cut oracle (drift_detector.py:115-126 semantics):
+the drift kernel's count stage, ``drift_counts``, over one numerical feature."""
 
 import numpy as np
 import pandas as pd
 import pytest
+from numpy_oracles import histogram_from_values
 
-from mlops_drift_detection_spark.operators.histogram import (
-    histogram_counts,
-    histogram_from_values,
-)
+from mlops_drift_detection_spark.baseline import BaselineSnapshot, NumericalBaseline
+from mlops_drift_detection_spark.operators.drift import drift_counts
 
 
 def pd_cut_counts(values, edges):
@@ -23,6 +23,20 @@ def pd_cut_counts(values, edges):
 
 EDGES = [0.0, 1.0, 2.5, 5.0, 10.0]
 
+
+def kernel_counts(df, edges, group_col=None) -> dict:
+    """{partition: dense bin counts} of column ``x`` from ``drift_counts``;
+    key "-1" (NULL, NaN, out of range) falls in no bin."""
+    nb = NumericalBaseline(0.0, 0.0, 0.0, 0.0, 0.0, 0.0, 0.0, list(edges), [])
+    snap = BaselineSnapshot(n_samples=0, numerical={"x": nb})
+    out: dict = {}
+    for r in drift_counts(df, snap, partition_col=group_col).collect():
+        counts = out.setdefault(r["partition"], np.zeros(len(edges) - 1))
+        if r["__k"] != "-1":
+            counts[int(r["__k"])] += r["__cnt"]
+    return out
+
+
 DATASETS = [
     [0.0, 0.5, 1.0, 1.5, 2.5, 2.6, 5.0, 9.9, 10.0],       # edge values
     [-5.0, 0.0, 10.0, 10.1, 11.0],                        # out of range both sides
@@ -36,12 +50,8 @@ DATASETS = [
 @pytest.mark.parametrize("values", DATASETS, ids=range(len(DATASETS)))
 def test_histogram_matches_pd_cut(spark, values):
     df = spark.createDataFrame([(v,) for v in values], "x double")
-    got_rows = histogram_counts(df, "x", EDGES).collect()
+    got = kernel_counts(df, EDGES).get("__all__", np.zeros(len(EDGES) - 1))
     want = pd_cut_counts([v for v in values if v is not None], EDGES)
-    if not got_rows:
-        assert want.sum() == 0
-        return
-    got = np.array(got_rows[0]["counts"])
     np.testing.assert_allclose(got, want)
 
 
@@ -57,10 +67,7 @@ def test_histogram_grouped(spark):
         ("b", float(i % 3)) for i in range(30)
     ]
     df = spark.createDataFrame(rows, "g string, x double")
-    got = {
-        r["g"]: np.array(r["counts"])
-        for r in histogram_counts(df, "x", EDGES, group_cols=["g"]).collect()
-    }
+    got = kernel_counts(df, EDGES, group_col="g")
     pdf = pd.DataFrame(rows, columns=["g", "x"])
     for g, sub in pdf.groupby("g"):
         np.testing.assert_allclose(got[g], pd_cut_counts(sub["x"].tolist(), EDGES))
@@ -71,6 +78,6 @@ def test_histogram_partition_invariance(spark):
     vals = [float(v) for v in np.linspace(0, 10, 500)]
     df1 = spark.createDataFrame([(v,) for v in vals], "x double").repartition(1)
     df2 = spark.createDataFrame([(v,) for v in vals], "x double").repartition(13)
-    c1 = histogram_counts(df1, "x", EDGES).collect()[0]["counts"]
-    c2 = histogram_counts(df2, "x", EDGES).collect()[0]["counts"]
+    c1 = kernel_counts(df1, EDGES)["__all__"]
+    c2 = kernel_counts(df2, EDGES)["__all__"]
     assert list(c1) == list(c2)

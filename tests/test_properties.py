@@ -19,16 +19,15 @@ import pandas as pd
 import pytest
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
+from numpy_oracles import ks_from_counts, psi_severity
 from pyspark.sql import functions as F
 
 from mlops_drift_detection_spark.functions.textstats import winnow_fingerprints
 from mlops_drift_detection_spark.operators.histogram import bucket_expr_native
 from mlops_drift_detection_spark.operators.psi import (
     ks_expr,
-    ks_from_counts,
     psi_expr,
     psi_from_counts,
-    psi_severity,
     psi_severity_expr,
 )
 

@@ -1,6 +1,6 @@
 """Structured Streaming drift validation: file-source micro-batches,
-watermarked windowed aggregation, foreachBatch PSI verdicts, and the
-applyInPandasWithState cumulative drift operator.
+foreachBatch PSI verdicts (per batch, and accumulated across batches),
+plus streaming session windows and cross-batch dedup state.
 
 Fixtures mirror the reference's normal-vs-drifted pattern
 (reference: test_drift_detection.py:46-171): micro-batch 0 matches the
@@ -25,8 +25,6 @@ from mlops_drift_detection_spark.operators.psi import psi_from_counts
 from mlops_drift_detection_spark.streaming import (
     foreach_batch_validator,
     run_file_stream_validation,
-    stateful_lang_drift,
-    windowed_profile,
 )
 
 CATS = ["en", "de", "es"]
@@ -119,7 +117,8 @@ def test_foreach_batch_drift_alarm(spark, stream_dirs, tmp_path):
 
 
 def test_foreach_batch_matches_batch_kernel(spark, stream_dirs):
-    """Streaming verdicts use the exact batch PSI kernel (same floats)."""
+    """Streaming verdicts equal the reference-exact PSI of the batch's
+    category counts (same floats)."""
     inp, ckpt = stream_dirs
     langs = _drifted_langs(500)
     _mk_batch(spark, langs, 0, hour=0).coalesce(1).write.parquet(f"{inp}/b0")
@@ -159,93 +158,6 @@ def test_foreach_batch_checkpoint_no_reprocess(spark, stream_dirs):
     _await(q2)
     assert len(rows2) == 1  # only the new file
     assert rows2[0]["n_rows"] == 200
-
-
-def test_windowed_profile_event_time(spark, stream_dirs):
-    """Watermarked tumbling windows: per-(window, lang) counts over event
-    time, memory sink, availableNow."""
-    inp, ckpt = stream_dirs
-    _mk_batch(spark, _normal_langs(100), 0, hour=0).coalesce(1).write.parquet(
-        f"{inp}/b0"
-    )
-    # hour-4 batch pushes the 1h watermark past the hour-0 window's end so
-    # append mode emits the closed window
-    _mk_batch(spark, _normal_langs(100), 1000, hour=4).coalesce(1).write.parquet(
-        f"{inp}/b1"
-    )
-    stream = (
-        spark.readStream.schema(SCHEMA).option("maxFilesPerTrigger", "1").parquet(f"{inp}/*")
-    )
-    prof = windowed_profile(
-        stream, ts_col="ts", key_col="lang", value_col="n_chars",
-        window="1 hour", watermark="1 hour",
-    )
-    name = f"winprof_{int(time.time() * 1000)}"
-    q = (
-        prof.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("append")
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    _await(q)
-    got = spark.sql(f"SELECT * FROM {name}").collect()
-    # append mode only emits windows closed by the watermark; with
-    # availableNow the final watermark passes the hour-0 window.
-    assert len(got) >= 1
-    for r in got:
-        assert r["n"] > 0 and r["key"] in CATS
-        assert r["window_end"] > r["window_start"]
-
-
-def test_stateful_cumulative_drift(spark, stream_dirs):
-    """applyInPandasWithState: cumulative per-source histogram across
-    micro-batches; PSI reflects the running mix, not just the last batch."""
-    inp, ckpt = stream_dirs
-    # two micro-batches for one key 'src': first normal, second drifted;
-    # cumulative mix after batch 2 = average of the two -> medium PSI
-    b0 = _mk_batch(spark, _normal_langs(600), 0, hour=0).withColumn(
-        "source", F.lit("src")
-    )
-    b1 = _mk_batch(spark, _drifted_langs(600), 5000, hour=1).withColumn(
-        "source", F.lit("src")
-    )
-    b0.coalesce(1).write.parquet(f"{inp}/b0")
-    b1.coalesce(1).write.parquet(f"{inp}/b1")
-
-    # StructType.add MUTATES in place — copy so the module-global SCHEMA
-    # stays 4 fields for the tests that run after this one
-    schema = StructType(list(SCHEMA.fields) + [StructField("source", StringType())])
-    stream = (
-        spark.readStream.schema(schema).option("maxFilesPerTrigger", "1").parquet(f"{inp}/*")
-    )
-    out = stateful_lang_drift(
-        stream.groupBy("source"), BASELINE, CATS, cat_col="lang"
-    )
-    name = f"statedrift_{int(time.time() * 1000)}"
-    q = (
-        out.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("update")
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    _await(q)
-    rows = sorted(
-        spark.sql(f"SELECT * FROM {name}").collect(), key=lambda r: r["n_total"]
-    )
-    assert len(rows) == 2
-    assert rows[0]["n_total"] == 600 and rows[1]["n_total"] == 1200
-    # cumulative semantics: the second emission's PSI equals the kernel on the
-    # summed counts
-    langs = _normal_langs(600) + _drifted_langs(600)
-    expected = [BASELINE[c] for c in CATS]
-    cum = [float(sum(1 for x in langs if x == c)) for c in CATS]
-    assert rows[1]["psi"] == pytest.approx(psi_from_counts(expected, cum), abs=1e-12)
-    assert rows[1]["drift_detected"] == "true"
-    assert rows[0]["psi"] < 0.2
 
 
 def test_session_window_stream_matches_batch_sessionize(spark, tmp_path):
