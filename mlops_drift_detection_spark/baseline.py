@@ -16,12 +16,13 @@ The snapshot is tiny (KBs) regardless of input size. It takes two full-data
 passes for any feature count: one aggregate for the moments, quantile edges
 and binary flags, then the drift kernel's own count stage (``drift_counts``)
 for the bin and category counts. It is collected to the driver, persisted as
-JSON, and broadcast back to executors for the drift pass. At 100 TB the cost
+JSON, and carried into the drift plan as literals. At 100 TB the cost
 is the scan; everything after the partial aggregation is O(features x bins).
 """
 
 from __future__ import annotations
 
+import hashlib
 import json
 import math
 import os
@@ -92,6 +93,28 @@ class BaselineSnapshot:
                 k: BinaryBaseline(**v) for k, v in d.get("binary", {}).items()
             },
         )
+
+    def sha256(self) -> str:
+        """Digest of the canonical JSON (sorted keys, no whitespace): equal
+        for a snapshot and its :meth:`save`/:meth:`load` round trip."""
+        canonical = json.dumps(self.to_dict(), sort_keys=True, separators=(",", ":"))
+        return hashlib.sha256(canonical.encode()).hexdigest()
+
+    def blind_features(self) -> dict[str, str]:
+        """Features whose frozen snapshot can never raise a drift alarm, each
+        with the reason: all-zero expected counts score PSI and KS 0.0
+        against any input, and an empty category list yields no verdict."""
+        out = {
+            f: "all baseline bin counts are zero"
+            for f, nb in self.numerical.items()
+            if not any(nb.counts)
+        }
+        out.update(
+            (f, "the baseline has no categories")
+            for f, cb in self.categorical.items()
+            if not cb.categories
+        )
+        return out
 
     def save(self, path: str) -> None:
         """Atomic write-then-rename so a killed run never leaves a torn file."""

@@ -22,7 +22,11 @@ frozen baseline snapshot, runs every constraint + drift check as declarative
 DataFrame plans, writes violations/verdicts/summary parquet, and checkpoints
 each completed partition wave into the manifest so a killed run re-invoked
 with ``--resume`` skips finished partitions (their slice is pruned before the
-scan). Prints one JSON status line for orchestration.
+scan) as long as the input path, the baseline and the suite config are
+unchanged. Prints one JSON status line for orchestration: row, violation and
+verdict counts, the violations per check and drift alarms per severity of
+this run's waves, and warnings (0 rows validated, a baseline feature that can
+never alarm).
 """
 
 from __future__ import annotations
@@ -112,13 +116,9 @@ def main(argv: list[str] | None = None) -> int:
 
     manifest = None
     if args.manifest_dir:
+        # a resume reuses only results of the same input, baseline and config
         manifest = CheckpointManifest(
-            args.manifest_dir,
-            lineage={
-                "input": args.input,
-                "n_buckets": args.n_buckets,
-                "checks": ",".join(cfg.checks),
-            },
+            args.manifest_dir, lineage={"input": args.input, **suite.lineage()}
         )
 
     t0 = time.time()
@@ -128,8 +128,13 @@ def main(argv: list[str] | None = None) -> int:
         cf, cm, manifest=manifest, resume=args.resume, n_waves=args.n_waves,
         output_dir=args.output,
     )
-    n_viol = res.violations.count()
-    n_verd = res.verdicts.count()
+    if args.resume:
+        # the outputs hold rows of earlier runs too: count them
+        n_viol, n_verd = res.violations.count(), res.verdicts.count()
+    else:
+        # a fresh run's outputs are exactly its waves, already counted
+        n_viol = sum(res.violations_by_check.values())
+        n_verd = res.n_verdicts
     elapsed = time.time() - t0
 
     print(
@@ -140,6 +145,11 @@ def main(argv: list[str] | None = None) -> int:
                 "violations": n_viol,
                 "verdicts": n_verd,
                 "skipped_partitions": len(res.skipped_partitions),
+                # counters of this run's waves only (skipped partitions'
+                # results were counted by the run that produced them)
+                "violations_by_check": res.violations_by_check,
+                "drift_alarms": res.drift_alarms,
+                "warnings": res.warnings,
                 "elapsed_sec": round(elapsed, 3),
                 "rows_per_sec": round(res.n_rows_validated / elapsed, 1)
                 if elapsed > 0

@@ -9,9 +9,9 @@ the source-code table:
 * uniqueness on key columns: hash-partitioned ``groupBy(...).count()`` —
   Spark's hash shuffle IS the hash partitioning; map-side partial counts make
   the shuffle proportional to distinct keys, not rows.
-* referential (fact.commit -> dim.commit): LEFT ANTI join. The distinct dim
-  keys are broadcast by default (explicit ``F.broadcast``); opting out gives
-  a shuffled anti-join with AQE skew-split handling the planted mega-repo.
+* referential (fact.commit -> dim.commit): LEFT ANTI join. The dim keys are
+  broadcast by default (explicit ``F.broadcast``); opting out gives a
+  shuffled anti-join with AQE skew-split handling the planted mega-repo.
 * row rules (not-null, not-empty, range, regex, z-score, the sha256
   per-row invariant, ...): :class:`RowRule` Column predicates, all fused into
   one scan by :func:`fused_row_violations` — they stay in whole-stage
@@ -90,12 +90,13 @@ def referential_violations(
 ) -> DataFrame:
     """Fact rows whose key is absent from the dim (LEFT ANTI).
 
-    ``broadcast_dim=True`` (default) broadcasts the DISTINCT dim keys — the
-    distinct-key projection of even a large commit dim is far smaller than
-    the dim itself. With ``False``, a shuffled anti-join is used and AQE's
-    skew-join splitting covers skewed fact keys.
+    ``broadcast_dim=True`` (default) broadcasts the dim's key column only.
+    It is not deduplicated: a LEFT ANTI join emits the same fact rows
+    whatever duplicates its build side holds, and a ``distinct`` would cost
+    a shuffle job of its own under the broadcast. With ``False``, a shuffled
+    anti-join is used and AQE's skew-join splitting covers skewed fact keys.
     """
-    dim_keys = dim.select(F.col(dim_key).alias(fact_key)).distinct()
+    dim_keys = dim.select(F.col(dim_key).alias(fact_key))
     if broadcast_dim:
         dim_keys = F.broadcast(dim_keys)
     missing = facts.join(dim_keys, on=fact_key, how="left_anti")

@@ -12,7 +12,7 @@ multi-aggregate job (:func:`fused_drift_verdicts`):
   binary:      the reference's proportion-difference test
                (drift_detector.py:203-225) from the same moment sums.
 
-Baseline count vectors ride a tiny broadcast spec table; the only full-data
+Baseline count vectors ride the plan as a literal spec map; the only full-data
 work is the scan + one shuffle keyed on (partition, feature, key) — the
 count stage :func:`drift_counts`, which ``baseline.compute_baseline`` also
 uses to count the snapshot it freezes. PSI is
@@ -26,7 +26,7 @@ mean_change_pct with the same NaN/zero guards (drift_detector.py:137-165).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from mlops_drift_detection_spark.baseline import BaselineSnapshot
@@ -148,9 +148,10 @@ def fused_drift_verdicts(
          on (partition, feature, key) with map-side combine;
       3. a tiny second aggregate assembles each (partition, feature)'s
          sparse key->count map plus moment sums;
-      4. a broadcast join against the baseline spec (feature, kind, frozen
-         key list, expected counts, mean/std — KBs for any feature count)
-         densifies the counts, projects PSI and KS once each, and derives
+      4. a lookup in the baseline spec, a plan literal mapping each feature
+         to its kind, frozen key list, expected counts and mean/std (KBs
+         for any feature count, and no job of its own), densifies the
+         counts, projects PSI and KS once each, and derives
          the moments and verdict fields in one kind-switched projection.
 
     A partition whose rows all miss a feature's frozen category list (or
@@ -162,10 +163,8 @@ def fused_drift_verdicts(
     At 100 TB and 51 features this replaces 51 scans + 51 shuffles with one
     scan + one full-data shuffle; everything after step 2 is metadata-sized.
     """
+    spec_map = _spec_map(baseline)
     micro = drift_counts(df, baseline, partition_col)
-    num_feats = list(baseline.numerical.items())
-    cat_feats = list(baseline.categorical.items())
-    bin_feats = list(baseline.binary.items())
     per_feature = micro.groupBy("partition", "__f").agg(
         F.map_from_arrays(
             F.collect_list("__k"), F.collect_list("__cnt")
@@ -176,41 +175,15 @@ def fused_drift_verdicts(
         F.sum("__sum2").alias("__tsum2"),
     )
 
-    spec_rows = []
-    for feat, nb in num_feats:
-        n_bins = max(len(nb.bins) - 1, 1)
-        spec_rows.append(
-            (
-                feat,
-                "numerical",
-                [str(i) for i in range(n_bins)],
-                [float(c) for c in nb.counts],
-                float(nb.mean),
-                float(nb.std),
-            )
-        )
-    for feat, cb in cat_feats:
-        spec_rows.append(
-            (
-                feat,
-                "categorical",
-                [str(c) for c in cb.categories],
-                [float(c) for c in cb.counts],
-                float(cb.proportions[0]) if cb.proportions else 0.0,
-                0.0,
-            )
-        )
-    for feat, bb in bin_feats:
-        spec_rows.append(
-            (feat, "categorical_binary", [], [], float(bb.proportion_ones), 0.0)
-        )
-    spec = df.sparkSession.createDataFrame(
-        spec_rows,
-        "feature string, kind string, keys array<string>, "
-        "bcounts array<double>, bmean double, bstd double",
+    # The spec is a plan literal looked up by feature name: a spec TABLE
+    # would be one more broadcast job per action (an RDD- or local-table-
+    # backed DataFrame still runs its BroadcastExchange as a job). A feature
+    # with no spec entry drops out, as under an inner join.
+    j = (
+        per_feature.withColumn("__spec", spec_map[F.col("__f")])
+        .where(F.col("__spec").isNotNull())
+        .select("*", F.col("__f").alias("feature"), "__spec.*")
     )
-    j = per_feature.join(F.broadcast(spec), per_feature["__f"] == spec["feature"])
-
     # Staged: the dense counts, then their total, PSI and KS, are projected
     # once each as columns. The verdict projection reads psi four times, and
     # Catalyst keeps a stage apart rather than duplicate a non-trivial
@@ -279,6 +252,62 @@ def fused_drift_verdicts(
             "n_samples"
         ),
     )
+
+
+def _spec_map(baseline: BaselineSnapshot) -> Column:
+    """``feature -> struct(kind, keys, bcounts, bmean, bstd)`` as one literal
+    map: the frozen key list, expected counts and baseline moments of every
+    feature. Feature names must be unique across kinds, because a map has
+    one entry per key and the count stage keys its rows by name alone."""
+    entries = [
+        (
+            feat,
+            "numerical",
+            [str(i) for i in range(max(len(nb.bins) - 1, 1))],
+            nb.counts,
+            nb.mean,
+            nb.std,
+        )
+        for feat, nb in baseline.numerical.items()
+    ]
+    entries += [
+        (
+            feat,
+            "categorical",
+            [str(c) for c in cb.categories],
+            cb.counts,
+            cb.proportions[0] if cb.proportions else 0.0,
+            0.0,
+        )
+        for feat, cb in baseline.categorical.items()
+    ]
+    entries += [
+        (feat, "categorical_binary", [], [], bb.proportion_ones, 0.0)
+        for feat, bb in baseline.binary.items()
+    ]
+    seen: set[str] = set()
+    for feat, *_ in entries:
+        if feat in seen:
+            raise ValueError(
+                f"baseline feature {feat!r} appears under more than one kind; "
+                "drift features need unique names"
+            )
+        seen.add(feat)
+    pairs = []
+    for feat, kind, keys, bcounts, bmean, bstd in entries:
+        pairs += [
+            F.lit(feat),
+            F.struct(
+                F.lit(kind).alias("kind"),
+                F.array(*[F.lit(k) for k in keys]).cast("array<string>").alias("keys"),
+                F.array(*[F.lit(float(c)) for c in bcounts])
+                .cast("array<double>")
+                .alias("bcounts"),
+                F.lit(float(bmean)).alias("bmean"),
+                F.lit(float(bstd)).alias("bstd"),
+            ),
+        ]
+    return F.create_map(*pairs)
 
 
 def drift_summary(verdicts: DataFrame) -> DataFrame:

@@ -21,8 +21,11 @@ Scale shape: every check is a Column-expression filter or a single
 partial-aggregated shuffle. The violations and verdicts plans are built
 ONCE per run; a wave is only a predicate on the logical partition, which
 Catalyst pushes through the aggregates and joins into each check's
-column-pruned scan, so the pass over N rows does O(1) scans per wave and
-no wave slice is cached. The logical partition is
+column-pruned scan, so the pass over N rows does O(1) scans per wave. A
+wave's only Spark actions are its two writes: its counters (rows,
+violations per partition and per check, drift alarms, max PSI) are
+``DataFrame.observe`` metrics collected with the writes, so with a sink no
+wave is cached and no count is collected. The logical partition is
 ``pmod(xxhash64(repo), n_buckets)``; when the input table is WRITTEN
 partitioned by that id (``part_id`` hive layout), the pushed wave
 predicate becomes a scan PartitionFilter and resume prunes whole
@@ -32,10 +35,12 @@ directories from the scan — I/O-level skipping, not just compute-level.
 from __future__ import annotations
 
 import functools
+import hashlib
+import json
 import uuid
-from dataclasses import dataclass, field
+from dataclasses import asdict, dataclass, field
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from mlops_drift_detection_spark.baseline import BaselineSnapshot, compute_baseline
@@ -52,6 +57,18 @@ from mlops_drift_detection_spark.plans.manifest import (
 
 PART = C.PARTITION_COL
 CONTENT_LEN = "content_length"
+
+# the ``check`` value each configured check writes into its violation rows
+VIOLATION_CHECK = {
+    "uniqueness": "uniqueness",
+    "referential": "referential",
+    "not_null_lang": "not_null",
+    "not_empty_content": "not_empty",
+    "content_length_range": "range",
+    "commit_format": "regex",
+    "sha256_invariant": "sha256_invariant",
+}
+SEVERITIES = ("low", "medium", "high")
 
 
 @dataclass
@@ -79,8 +96,14 @@ class SuiteResult:
     summary: DataFrame
     n_rows_validated: int = 0
     skipped_partitions: list[str] = field(default_factory=list)
-    # wave caches backing violations/verdicts when no output_dir was given
-    # (with a sink, run() releases them itself — the sink is authoritative)
+    # counters observed on this run's waves (skipped partitions not included):
+    # verdict rows, violations per check value, drift alarms per severity
+    n_verdicts: int = 0
+    violations_by_check: dict[str, int] = field(default_factory=dict)
+    drift_alarms: dict[str, int] = field(default_factory=dict)
+    warnings: list[str] = field(default_factory=list)
+    # wave caches backing violations/verdicts when no output_dir was given;
+    # with a sink nothing is cached, because the outputs read the sink
     _caches: list[DataFrame] = field(default_factory=list)
 
     def release(self) -> None:
@@ -111,6 +134,16 @@ class ValidationSuite:
             prepared, [CONTENT_LEN], ["lang"], exact_quantiles=exact_quantiles
         )
 
+    def lineage(self) -> dict[str, str]:
+        """Manifest lineage of this suite's results: a sha256 of the
+        canonical baseline JSON and a digest of every config field. A resume
+        under a manifest whose entries carry other values recomputes."""
+        config = json.dumps(asdict(self.config), sort_keys=True)
+        return {
+            "baseline_sha256": self.baseline.sha256(),
+            "config_sha256": hashlib.sha256(config.encode()).hexdigest(),
+        }
+
     # ------------------------------------------------------------------- parts
     def with_partition(self, df: DataFrame) -> DataFrame:
         """Attach the logical partition id.
@@ -131,58 +164,74 @@ class ValidationSuite:
         )
 
     # ------------------------------------------------------------- constraints
+    def _active_checks(self, df: DataFrame, commits_dim: DataFrame | None) -> list[str]:
+        """The configured checks that apply to this input: referential needs
+        a dim, the sha256 invariant a ``content_sha256`` column."""
+        return [
+            c
+            for c in self.config.checks
+            if c in VIOLATION_CHECK
+            and (c != "referential" or commits_dim is not None)
+            and (c != "sha256_invariant" or "content_sha256" in df.columns)
+        ]
+
     def violations(self, df: DataFrame, commits_dim: DataFrame | None) -> DataFrame:
         """All constraint checks: the row-level rules are FUSED into one scan
         (array-of-structs + explode — see C.fused_row_violations); uniqueness
         adds its key shuffle and referential its anti-join. Three data
         traversals total, independent of the number of row rules."""
         cfg = self.config
+        active = self._active_checks(df, commits_dim)
         checks: list[DataFrame] = []
-        on = lambda name: name in cfg.checks  # noqa: E731
-        if on("uniqueness"):
+        if "uniqueness" in active:
             checks.append(C.uniqueness_violations(df, cfg.key_cols))
-        if on("referential") and commits_dim is not None:
+        if "referential" in active:
             checks.append(C.referential_violations(df, commits_dim))
 
         rules: list[C.RowRule] = []
-        if on("not_null_lang"):
-            rules.append(
-                C.RowRule("not_null", "lang", F.col("lang").isNull(), F.lit("null value"))
-            )
-        if on("not_empty_content"):
+        if "not_null_lang" in active:
             rules.append(
                 C.RowRule(
-                    "not_empty",
+                    VIOLATION_CHECK["not_null_lang"],
+                    "lang",
+                    F.col("lang").isNull(),
+                    F.lit("null value"),
+                )
+            )
+        if "not_empty_content" in active:
+            rules.append(
+                C.RowRule(
+                    VIOLATION_CHECK["not_empty_content"],
                     "content",
                     F.col("content").isNotNull() & (F.length("content") == 0),
                     F.lit("empty value"),
                 )
             )
-        if on("content_length_range"):
+        if "content_length_range" in active:
             clen = F.length("content")
             rules.append(
                 C.RowRule(
-                    "range",
+                    VIOLATION_CHECK["content_length_range"],
                     CONTENT_LEN,
                     clen.isNotNull()
                     & ((clen < F.lit(1.0)) | (clen > F.lit(cfg.max_content_length))),
                     F.concat(F.lit("value="), clen.cast("string")),
                 )
             )
-        if on("commit_format"):
+        if "commit_format" in active:
             rules.append(
                 C.RowRule(
-                    "regex",
+                    VIOLATION_CHECK["commit_format"],
                     "commit",
                     F.col("commit").isNotNull()
                     & ~F.col("commit").rlike(cfg.commit_regex),
                     F.concat(F.lit("value="), F.col("commit").cast("string")),
                 )
             )
-        if on("sha256_invariant") and "content_sha256" in df.columns:
+        if "sha256_invariant" in active:
             rules.append(
                 C.RowRule(
-                    "sha256_invariant",
+                    VIOLATION_CHECK["sha256_invariant"],
                     "content",
                     F.col("content").isNotNull()
                     & (F.sha2(F.col("content"), 256) != F.col("content_sha256")),
@@ -199,11 +248,12 @@ class ValidationSuite:
     # ------------------------------------------------------------------- drift
     def drift_verdicts(self, df: DataFrame) -> DataFrame:
         """All drift features from ONE scan via the N-feature fused operator
-        (single (partition, feature, key) shuffle + broadcast baseline spec
-        — no checkpointed micro-table, so a multi-wave run leaves no cached
-        blocks behind). Any feature set the baseline carries compiles into
-        the same one job; the suite's default baseline has the two
-        north-rule features (content_length histogram + lang mix)."""
+        (single (partition, feature, key) shuffle + the baseline spec as a
+        plan literal — no checkpointed micro-table, so a multi-wave run
+        leaves no cached blocks behind). Any feature set the baseline
+        carries compiles into the same one job; the suite's default baseline
+        has the two north-rule features (content_length histogram + lang
+        mix)."""
         cfg = self.config
         prepared = df.select(
             PART, "lang", F.length("content").cast("double").alias(CONTENT_LEN)
@@ -242,6 +292,18 @@ class ValidationSuite:
         results exist only in the (lost) driver plan — the manifest would
         skip their recomputation and the final output would silently omit
         them.
+
+        Without ``output_dir`` each wave is cached, because the caches back
+        the returned DataFrames, and materialized by one ``noop`` write of
+        its violations and one of its verdicts. Either way the wave's
+        counters are observed on those writes (``pyspark.sql.Observation``)
+        and feed the manifest entries (rows, violations, and in ``metrics``
+        the drift alarms and max PSI per partition) and the result's
+        ``n_rows_validated``, ``n_verdicts``, ``violations_by_check`` and
+        ``drift_alarms``.
+        Those cover this run's waves only; skipped partitions were counted
+        by the run that produced them. ``warnings`` names 0 rows validated
+        and any baseline feature that can never alarm.
 
         Every row this run emits carries a ``run_id`` (reference id-gen
         pattern: main.py:156 ``pred_{uuid4}``); resumed-in rows keep the
@@ -287,14 +349,32 @@ class ValidationSuite:
         )
         verd_plan = self.drift_verdicts(dfp).withColumn("run_id", F.lit(run_id))
 
+        checks = [VIOLATION_CHECK[c] for c in self._active_checks(dfp, commits_dim)]
+        by_check = dict.fromkeys(checks, 0)
+        alarms = dict.fromkeys(SEVERITIES, 0)
+        n_verdicts = 0
         caches: list[DataFrame] = []
         first_wave = True
         for wave in waves:
             in_wave = F.col("partition").isin([str(p) for p in wave])
-            # cached: each serves the persist + count actions below (the
-            # verdicts are tiny, O(partitions x features))
-            viol = viol_plan.where(in_wave).cache()
-            verd = verd_plan.where(in_wave).cache()
+            viol = viol_plan.where(in_wave)
+            verd = verd_plan.where(in_wave)
+            if output_dir is None:
+                # no sink: the returned DataFrames are backed by these caches
+                # (caller releases via SuiteResult.release() when done)
+                viol, verd = viol.cache(), verd.cache()
+                caches += [viol, verd]
+                violations_out = (
+                    viol if violations_out is None else violations_out.unionByName(viol)
+                )
+                verdicts_out = (
+                    verd if verdicts_out is None else verdicts_out.unionByName(verd)
+                )
+            # the wave's counters ride its writes as observed metrics: no
+            # count collect, so with a sink nothing needs caching
+            viol_obs, verd_obs = Observation(), Observation()
+            viol = viol.observe(viol_obs, *_violation_counters(wave, checks))
+            verd = verd.observe(verd_obs, *_verdict_counters(wave))
             if output_dir is not None:
                 # a fresh (non-resume) run statically overwrites the sink on
                 # its first wave (clearing stale partitions from older runs);
@@ -302,51 +382,34 @@ class ValidationSuite:
                 dynamic = resume or not first_wave
                 self._persist_wave(viol, f"{output_dir}/violations", dynamic)
                 self._persist_wave(verd, f"{output_dir}/verdicts", dynamic)
+            else:
+                for wave_df in (viol, verd):
+                    wave_df.write.format("noop").mode("overwrite").save()
             first_wave = False
-            # materialize wave results
-            viol_count_by_part = {
-                r["partition"] or "__none__": r["n"]
-                for r in viol.groupBy("partition").agg(F.count(F.lit(1)).alias("n")).collect()
-            }
-            # per-partition row counts come FREE from the drift job: the
-            # numerical verdict's n_samples is count(*) of its partition
-            # (drift_detector.py:284 semantics) — no dedicated count scan
-            rows_by_part = {
-                int(r["partition"]): int(r["n_samples"])
-                for r in verd.where(F.col("feature") == F.lit(CONTENT_LEN))
-                .select("partition", "n_samples")
-                .collect()
-            }
-            n_rows_total += sum(rows_by_part.values())
+            got = {**viol_obs.get, **verd_obs.get}
+            # a sum over no matching row reads NULL: count it as 0
+            n = {k: int(v or 0) for k, v in got.items() if not k.startswith("max_")}
+            for c in checks:
+                by_check[c] += n[f"check_{c}"]
+            for sev in SEVERITIES:
+                alarms[sev] += n[f"alarms_{sev}"]
+            n_rows_total += sum(n[f"rows_{p}"] for p in wave)
+            n_verdicts += n["verdicts"]
             if manifest is not None:
                 for p in wave:
                     manifest.mark_complete(
                         PartitionEntry(
                             partition=str(p),
-                            n_rows=int(rows_by_part.get(p, 0)),
-                            n_violations=int(viol_count_by_part.get(str(p), 0)),
+                            n_rows=n[f"rows_{p}"],
+                            n_violations=n[f"violations_{p}"],
                             checks_run=list(self.config.checks),
-                            metrics={"run_id": run_id},
+                            metrics={
+                                "run_id": run_id,
+                                "drift_alarms": n[f"alarms_{p}"],
+                                "max_psi": got[f"max_psi_{p}"],
+                            },
                         )
                     )
-            if output_dir is not None:
-                # the sink now holds this wave durably — release the caches
-                # HERE (blocking, so the blocks are gone before the next
-                # wave allocates) and violation blocks never accumulate
-                # across waves (VERDICT r2 finding #4); the final outputs
-                # read the sink.
-                viol.unpersist(blocking=True)
-                verd.unpersist(blocking=True)
-            else:
-                # no sink: the returned DataFrames are backed by these caches
-                # (caller releases via SuiteResult.release() when done)
-                violations_out = (
-                    viol if violations_out is None else violations_out.unionByName(viol)
-                )
-                verdicts_out = (
-                    verd if verdicts_out is None else verdicts_out.unionByName(verd)
-                )
-                caches += [viol, verd]
 
         verd_schema = VERDICT_SCHEMA + ", run_id string"
         if output_dir is not None:
@@ -375,12 +438,22 @@ class ValidationSuite:
         summary = drift_summary(verdicts_out)
         if output_dir is not None:
             summary.write.mode("overwrite").parquet(f"{output_dir}/summary")
+        warnings = [
+            f"baseline feature '{f}' can never alarm: {why}"
+            for f, why in self.baseline.blind_features().items()
+        ]
+        if n_rows_total == 0:
+            warnings.append("0 rows validated")
         return SuiteResult(
             violations=violations_out,
             verdicts=verdicts_out,
             summary=summary,
             n_rows_validated=n_rows_total,
             skipped_partitions=[str(p) for p in skipped_i],
+            n_verdicts=n_verdicts,
+            violations_by_check=by_check,
+            drift_alarms=alarms,
+            warnings=warnings,
             _caches=caches,
         )
 
@@ -415,3 +488,37 @@ class ValidationSuite:
         return on_disk.withColumn(
             "partition", F.col("partition").cast("string")
         ).select(*columns)
+
+
+def _violation_counters(wave: list[int], checks: list[str]) -> list[Column]:
+    """Observed on a wave's violations: rows per wave partition and per
+    check value."""
+    part, check = F.col("partition"), F.col("check")
+    return [
+        F.count_if(part == F.lit(str(p))).alias(f"violations_{p}") for p in wave
+    ] + [F.count_if(check == F.lit(c)).alias(f"check_{c}") for c in checks]
+
+
+def _verdict_counters(wave: list[int]) -> list[Column]:
+    """Observed on a wave's verdicts, per wave partition: input rows (the
+    numerical ``content_length`` verdict's ``n_samples`` is its partition's
+    row count), drift alarms and the largest PSI (binary features score a
+    proportion difference, not a PSI, and are left out); and over the wave,
+    verdict rows and drift alarms per severity."""
+    part, alarm = F.col("partition"), F.col("drift_detected")
+    out = []
+    for p in wave:
+        here = part == F.lit(str(p))
+        out += [
+            F.sum(
+                F.when(here & (F.col("feature") == F.lit(CONTENT_LEN)), F.col("n_samples"))
+            ).alias(f"rows_{p}"),
+            F.count_if(here & alarm).alias(f"alarms_{p}"),
+            F.max(
+                F.when(here & (F.col("kind") != F.lit("categorical_binary")), F.col("psi"))
+            ).alias(f"max_psi_{p}"),
+        ]
+    return out + [F.count(F.lit(1)).alias("verdicts")] + [
+        F.count_if(alarm & (F.col("drift_severity") == F.lit(sev))).alias(f"alarms_{sev}")
+        for sev in SEVERITIES
+    ]

@@ -12,6 +12,8 @@ from numpy_oracles import histogram_from_values, ks_from_counts, psi_severity
 from mlops_drift_detection_spark.baseline import (
     BaselineSnapshot,
     BinaryBaseline,
+    CategoricalBaseline,
+    NumericalBaseline,
     compute_baseline,
 )
 from mlops_drift_detection_spark.operators.drift import (
@@ -614,3 +616,21 @@ def test_cusum_changepoint_detects_level_shift(spark, tmp_path):
         for d in range(30)
     ]
     assert not any(flags[:20]) and any(flags[20:])
+
+
+def test_duplicate_feature_name_across_kinds_rejected(spark):
+    """The drift spec is keyed by feature name, and the count stage would mix
+    the counts of one name under two kinds: refuse with the name."""
+    snap = BaselineSnapshot(
+        n_samples=2,
+        numerical={
+            "x": NumericalBaseline(
+                mean=0.5, std=0.5, min=0.0, max=1.0, median=0.5, q25=0.0,
+                q75=1.0, bins=[0.0, 0.5, 1.0], counts=[1.0, 1.0],
+            )
+        },
+        categorical={"x": CategoricalBaseline(["a"], [2.0], [1.0])},
+    )
+    df = spark.createDataFrame([(0.2,), (0.7,)], "x double")
+    with pytest.raises(ValueError, match="'x'"):
+        fused_drift_verdicts(df, snap)

@@ -115,7 +115,10 @@ def test_all_audited_queries_have_expectations():
 def test_max_count_caps_repeated_fragments():
     """A multi_feature_drift plan that re-inlines the PSI tree (one `ln(`
     per use) fails its cap; a single occurrence passes."""
-    m = {"scans": 1, "exch": 3, "wgl": False, "cart": False, "bnlj": False}
+    m = {"scans": 1, "exch": 2, "wgl": False, "cart": False, "bnlj": False}
     assert check_invariants("multi_feature_drift", {**m, "full": "ln(x)"}) == []
     bad = check_invariants("multi_feature_drift", {**m, "full": "ln(x) ln(y)"})
     assert any("'ln('" in b for b in bad), bad
+    # a baseline spec table (Scan ExistingRDD) under the join fails too
+    bad = check_invariants("multi_feature_drift", {**m, "full": "ln(x) Scan ExistingRDD"})
+    assert any("ExistingRDD" in b for b in bad), bad
