@@ -5,12 +5,13 @@ lineage + row/violation metrics so a killed run resumes without
 recomputation."
 
 Design: one JSON file per completed partition in ``<dir>/parts/``, written
-tmp-then-``os.replace`` so a kill mid-write never leaves a torn entry (the
-same atomicity discipline as a Spark/Iceberg commit; on HDFS/S3 this maps to
-a rename-based or Iceberg-append commit). A partition is "complete" iff its
-file exists and parses. Manifest entries carry lineage (input fingerprint,
-engine version, baseline hash) so a resume against CHANGED inputs refuses to
-skip — silent staleness is worse than recomputation.
+tmp-then-``os.replace`` (:func:`replace_atomically`) so a kill mid-write
+never leaves a torn entry (the same atomicity discipline as a Spark/Iceberg
+commit; on HDFS/S3 this maps to a rename-based or Iceberg-append commit). A
+partition is "complete" iff its file exists and parses. Manifest entries
+carry lineage (input fingerprint, engine version, baseline hash) so a resume
+against CHANGED inputs refuses to skip — silent staleness is worse than
+recomputation.
 """
 
 from __future__ import annotations
@@ -19,8 +20,9 @@ import hashlib
 import json
 import os
 import time
+from collections.abc import Callable
 from dataclasses import asdict, dataclass, field
-from typing import Any
+from typing import Any, BinaryIO
 
 
 @dataclass
@@ -32,6 +34,21 @@ class PartitionEntry:
     lineage: dict[str, Any] = field(default_factory=dict)
     metrics: dict[str, Any] = field(default_factory=dict)
     completed_at_epoch: float = 0.0
+
+
+def replace_atomically(path: str, write: Callable[[BinaryIO], Any]) -> None:
+    """Create or replace the local file ``path`` with what ``write`` puts in
+    a binary file: written and fsync'd under a ``.``-prefixed temp name in
+    the same directory (parquet and JSON readers skip it), then renamed over
+    ``path``. A kill leaves either the old file or the new one, never a torn
+    one."""
+    head, name = os.path.split(path)
+    tmp = os.path.join(head, f".{name}.tmp.{os.getpid()}")
+    with open(tmp, "wb") as f:
+        write(f)
+        f.flush()
+        os.fsync(f.fileno())
+    os.replace(tmp, path)
 
 
 def _slug(partition: str) -> str:
@@ -50,12 +67,7 @@ class CheckpointManifest:
 
     @staticmethod
     def _atomic_write(path: str, obj: dict) -> None:
-        tmp = f"{path}.tmp.{os.getpid()}"
-        with open(tmp, "w") as f:
-            json.dump(obj, f)
-            f.flush()
-            os.fsync(f.fileno())
-        os.replace(tmp, path)
+        replace_atomically(path, lambda f: f.write(json.dumps(obj).encode()))
 
     def _entry_path(self, partition: str) -> str:
         return os.path.join(self.parts_dir, f"{_slug(partition)}.json")

@@ -88,6 +88,13 @@ class SuiteConfig:
         "sha256_invariant",
     )
 
+    def __post_init__(self) -> None:
+        unknown = [c for c in self.checks if c not in VIOLATION_CHECK]
+        if unknown:
+            raise ValueError(
+                f"unknown check(s) {unknown}; valid checks: {sorted(VIOLATION_CHECK)}"
+            )
+
 
 @dataclass
 class SuiteResult:
@@ -170,8 +177,7 @@ class ValidationSuite:
         return [
             c
             for c in self.config.checks
-            if c in VIOLATION_CHECK
-            and (c != "referential" or commits_dim is not None)
+            if (c != "referential" or commits_dim is not None)
             and (c != "sha256_invariant" or "content_sha256" in df.columns)
         ]
 
@@ -284,8 +290,10 @@ class ValidationSuite:
         skip is I/O-level — pruned directories are never read.
 
         ``output_dir``: per-wave DURABLE persistence. Each wave's violations
-        and verdicts are written (dynamic partition overwrite keyed on the
-        logical partition — idempotent under wave retry) BEFORE the manifest
+        and verdicts are written (the wave's ``partition=<p>`` directories
+        are deleted, then a dynamic partition overwrite keyed on the logical
+        partition — idempotent under wave retry, and a recomputed partition
+        with no rows keeps none of an older run's) BEFORE the manifest
         marks the wave complete, so a kill between waves loses nothing: a
         resumed run unions its fresh waves with the skipped partitions' rows
         read back from the sink. Without it, a killed run's completed-wave
@@ -380,8 +388,9 @@ class ValidationSuite:
                 # its first wave (clearing stale partitions from older runs);
                 # everything else is a dynamic per-partition overwrite
                 dynamic = resume or not first_wave
-                self._persist_wave(viol, f"{output_dir}/violations", dynamic)
-                self._persist_wave(verd, f"{output_dir}/verdicts", dynamic)
+                for name, wave_df in (("violations", viol), ("verdicts", verd)):
+                    _clear_partitions(spark, f"{output_dir}/{name}", wave)
+                    self._persist_wave(wave_df, f"{output_dir}/{name}", dynamic)
             else:
                 for wave_df in (viol, verd):
                     wave_df.write.format("noop").mode("overwrite").save()
@@ -488,6 +497,18 @@ class ValidationSuite:
         return on_disk.withColumn(
             "partition", F.col("partition").cast("string")
         ).select(*columns)
+
+
+def _clear_partitions(spark: SparkSession, path: str, wave: list[int]) -> None:
+    """Delete the sink's ``partition=<p>`` directories of a wave about to be
+    rewritten. A dynamic overwrite replaces only the partitions that receive
+    rows, so a recomputed partition that now emits none would otherwise keep
+    an older run's rows."""
+    jvm = spark.sparkContext._jvm
+    root = jvm.org.apache.hadoop.fs.Path(path)
+    fs = root.getFileSystem(spark.sparkContext._jsc.hadoopConfiguration())
+    for p in wave:
+        fs.delete(jvm.org.apache.hadoop.fs.Path(root, f"partition={p}"), True)
 
 
 def _violation_counters(wave: list[int], checks: list[str]) -> list[Column]:

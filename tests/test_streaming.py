@@ -14,6 +14,7 @@ import pytest
 from pyspark.sql import Row
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
+    IntegerType,
     LongType,
     StringType,
     StructField,
@@ -158,6 +159,130 @@ def test_foreach_batch_checkpoint_no_reprocess(spark, stream_dirs):
     _await(q2)
     assert len(rows2) == 1  # only the new file
     assert rows2[0]["n_rows"] == 200
+
+
+SINK_SCHEMA = (
+    "struct<drift_detected:boolean,drop_id:bigint,n_rows:bigint,psi:double,batch_id:int>"
+)
+
+
+def _tagged(spark, langs, drop_ids):
+    """A batch of ``langs`` whose ``drop_id`` (an int column, the tag) cycles
+    through ``drop_ids``."""
+    df = _mk_batch(spark, langs, 0, hour=0)
+    tag = F.element_at(
+        F.array(*[F.lit(d) for d in drop_ids]),
+        (F.col("doc_id") % len(drop_ids) + 1).cast("int"),
+    )
+    return df.withColumn("drop_id", tag.cast("int"))
+
+
+def _sink_rows(spark, sink):
+    return sorted(
+        (r["batch_id"], r["drop_id"], r["n_rows"], r["psi"], r["drift_detected"])
+        for r in spark.read.parquet(sink).collect()
+    )
+
+
+def _files(root):
+    return sorted(
+        os.path.relpath(os.path.join(d, f), root)
+        for d, _dirs, names in os.walk(root)
+        for f in names
+    )
+
+
+def test_verdict_sink_matches_out_rows(spark, stream_dirs, tmp_path):
+    """A tagged stream's sink reads back with the verdict schema (integral
+    tag widened to bigint, batch_id from the directory) and exactly the
+    verdict rows the callback produced."""
+    inp, ckpt = stream_dirs
+    _tagged(spark, _normal_langs(), [0]).coalesce(1).write.parquet(f"{inp}/b0")
+    _tagged(spark, _drifted_langs(), [1, 2]).coalesce(1).write.parquet(f"{inp}/b1")
+    sink = str(tmp_path / "sink")
+    out_rows: list = []
+    cb = foreach_batch_validator(
+        BASELINE, CATS, out_rows=out_rows, sink_path=sink, tag_col="drop_id"
+    )
+    schema = StructType(SCHEMA.fields + [StructField("drop_id", IntegerType())])
+    _await(run_file_stream_validation(spark, f"{inp}/*", schema, ckpt, cb))
+
+    assert spark.read.parquet(sink).schema.simpleString() == SINK_SCHEMA
+    assert len(out_rows) == 3
+    assert _sink_rows(spark, sink) == sorted(
+        (r["batch_id"], r["drop_id"], r["n_rows"], r["psi"], r["drift_detected"])
+        for r in out_rows
+    )
+    assert not [f for f in _files(sink) if os.path.basename(f).startswith(".")]
+
+
+def test_verdict_sink_retry_replaces_its_batch(spark, tmp_path):
+    """Calling the callback twice with one batch_id leaves one row per tag,
+    the batch's one file and no temp file."""
+    sink = str(tmp_path / "sink")
+    cb = foreach_batch_validator(BASELINE, CATS, sink_path=sink, tag_col="drop_id")
+    batch = _tagged(spark, _normal_langs(300), [4, 5])
+    cb(batch, 0)
+    cb(batch, 0)
+    rows = _sink_rows(spark, sink)
+    assert [(b, t, n) for b, t, n, _p, _d in rows] == [(0, 4, 150), (0, 5, 150)]
+    assert _files(sink) == ["batch_id=0/part-00000.parquet"]
+
+
+def test_verdict_sink_retry_deletes_foreign_files(spark, tmp_path):
+    """A data file some other writer left in a batch's directory is gone
+    after that batch is retried; other batches are untouched."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    sink = tmp_path / "sink"
+    cb = foreach_batch_validator(BASELINE, CATS, sink_path=str(sink), tag_col="drop_id")
+    cb(_tagged(spark, _drifted_langs(200), [9]), 1)
+    (sink / "batch_id=0").mkdir()
+    stale = pa.table(
+        {"drift_detected": [True], "drop_id": [7], "n_rows": [1], "psi": [9.0]}
+    )
+    pq.write_table(stale, str(sink / "batch_id=0" / "part-00000-foreign.snappy.parquet"))
+    cb(_tagged(spark, _normal_langs(200), [3]), 0)
+    assert _files(str(sink)) == [
+        "batch_id=0/part-00000.parquet",
+        "batch_id=1/part-00000.parquet",
+    ]
+    assert [(b, t) for b, t, *_ in _sink_rows(spark, str(sink))] == [(0, 3), (1, 9)]
+
+
+def test_verdict_sink_all_null_tag_keeps_bigint(spark, tmp_path):
+    """A micro-batch whose tag column is all NULL still commits its verdict,
+    with the tag typed bigint, not inferred from the None values."""
+    sink = str(tmp_path / "sink")
+    batch = spark.createDataFrame([(None, "en"), (None, "de")], "drop_id int, lang string")
+    foreach_batch_validator(BASELINE, CATS, sink_path=sink, tag_col="drop_id")(batch, 3)
+    read = spark.read.parquet(sink)
+    assert read.schema.simpleString() == SINK_SCHEMA
+    assert [(b, t, n) for b, t, n, *_ in _sink_rows(spark, sink)] == [(3, None, 2)]
+
+
+def test_verdict_sink_micro_batch_runs_two_jobs(spark, tmp_path):
+    """A sink-backed micro-batch runs only its count's Spark jobs: the
+    verdicts are committed from the driver."""
+    sink = str(tmp_path / "sink")
+    cb = foreach_batch_validator(BASELINE, CATS, sink_path=sink, tag_col="drop_id")
+    batch = _tagged(spark, _normal_langs(500), [0, 1])
+    cb(batch, 0)  # warm
+    next_job = spark.sparkContext._jsc.sc().dagScheduler().nextJobId
+    before = next_job()
+    cb(batch, 1)
+    assert next_job() - before <= 2
+
+
+def test_verdict_sink_must_be_local(spark, tmp_path):
+    """The sink is committed with local file operations: a file:// path
+    works, any other scheme is refused by name."""
+    with pytest.raises(ValueError, match="s3a://bucket/verdicts"):
+        foreach_batch_validator(BASELINE, CATS, sink_path="s3a://bucket/verdicts")
+    cb = foreach_batch_validator(BASELINE, CATS, sink_path=f"file://{tmp_path}/sink")
+    cb(_mk_batch(spark, _normal_langs(100), 0, hour=0), 0)
+    assert _files(str(tmp_path / "sink")) == ["batch_id=0/part-00000.parquet"]
 
 
 def test_session_window_stream_matches_batch_sessionize(spark, tmp_path):

@@ -503,6 +503,44 @@ def test_sink_read_excludes_stale_partitions(data, tmp_path):
     assert res.verdicts.select("run_id").distinct().count() == 1
 
 
+def test_resume_under_changed_checks_drops_stale_violation_rows(data, tmp_path):
+    """A resume under a changed lineage recomputes every partition, and the
+    sink then holds only the new run's rows: a partition whose recomputed
+    wave emits no violations keeps none of the previous run's."""
+    _, cf, cm, baseline = data
+    out, mdir = str(tmp_path / "out"), str(tmp_path / "manifest")
+    full = ValidationSuite(baseline, SuiteConfig(n_partition_buckets=4))
+    first = full.run(
+        cf, cm, manifest=CheckpointManifest(mdir, full.lineage()), n_waves=2, output_dir=out
+    )
+    assert first.violations.where(F.col("check") != "regex").count() > 0
+    narrow = ValidationSuite(
+        baseline, SuiteConfig(n_partition_buckets=4, checks=("commit_format",))
+    )
+    res = narrow.run(
+        cf,
+        cm,
+        manifest=CheckpointManifest(mdir, narrow.lineage()),
+        resume=True,
+        n_waves=2,
+        output_dir=out,
+    )
+    assert res.skipped_partitions == []
+    key = lambda r: (r["partition"], r["check"], r["repo"], r["path"], r["commit"])  # noqa: E731
+    want = sorted(key(r) for r in narrow.run(cf, cm).violations.collect())
+    assert sorted(key(r) for r in res.violations.collect()) == want
+    assert {k[1] for k in want} <= {"regex"}
+
+
+def test_unknown_check_names_rejected():
+    """A misspelt check name fails loudly instead of silently running no
+    check; the error names each unknown check and the valid ones."""
+    with pytest.raises(ValueError, match="uniquness.*not_null'.*commit_format") as e:
+        SuiteConfig(checks=("uniquness", "not_null", "commit_format"))
+    assert "'commit_format'" not in str(e.value).split("valid")[0]
+    assert SuiteConfig(checks=("commit_format",)).checks == ("commit_format",)
+
+
 def test_code_validation_oracle_constants_track_fixture_arithmetic():
     """The catalog entry `code_validation_counts` compares the suite's
     violation counts against LITERAL constants in its DuckDB oracle
