@@ -151,6 +151,33 @@ def ensure_code_fixture(spark, n_rows: int) -> dict[str, str]:
     return paths
 
 
+def _warm_up(spark, sf_dir: str) -> None:
+    """JVM/JIT warmup (standard bench discipline): one untimed job through
+    codegen + the parquet reader + a shuffle, so the FIRST timed query
+    measures its plan, not interpreter-tier JIT and classloading. Runs once
+    before whichever group is timed first; disclosed in BENCH.md."""
+    from pyspark.sql import functions as F
+
+    spark.range(2_000_000).groupBy((F.col("id") % 16).alias("k")).agg(
+        F.sum("id"), F.avg("id")
+    ).collect()
+    spark.read.parquet(os.path.join(sf_dir, "region.parquet")).count()
+
+
+def time_queries(spark, sf_dir: str, names: list[str]) -> dict[str, float]:
+    """Wall seconds per catalog query, each executed in full by a ``noop``
+    write. A ``count()`` would let Catalyst prune every column and
+    expression the count does not need, so it times less than the query."""
+    from mlops_drift_detection_spark.queries import QUERIES
+
+    out = {}
+    for name in names:
+        t0 = time.time()
+        QUERIES[name](spark, sf_dir).write.format("noop").mode("overwrite").save()
+        out[name] = round(time.time() - t0, 3)
+    return out
+
+
 def run_full_pass(spark, paths: dict[str, str], n_rows: int) -> dict:
     """The north-rule metric: validated rows/sec, full constraint+drift pass.
 
@@ -175,13 +202,12 @@ def run_full_pass(spark, paths: dict[str, str], n_rows: int) -> dict:
     suite = ValidationSuite(baseline, cfg)
     t0 = time.time()
     res = suite.run(cf, cm)
-    n_viol = res.violations.count()
-    n_verd = res.verdicts.count()
     elapsed = time.time() - t0
+    res.release()
     return {
         "validated_rows": res.n_rows_validated,
-        "violations": n_viol,
-        "verdicts": n_verd,
+        "violations": sum(res.violations_by_check.values()),
+        "verdicts": res.n_verdicts,
         "fullpass_sec": round(elapsed, 3),
         "validated_rows_per_sec": round(res.n_rows_validated / elapsed, 1),
         "fullpass_config": {
@@ -207,60 +233,19 @@ def main() -> None:
     spark = _get_spark(args.cpus)
     spark.sparkContext.setLogLevel("ERROR")
 
-    from mlops_drift_detection_spark.queries import QUERIES
-
     per_query: dict[str, float] = {}
-    if not args.skip_headline:
-        # JVM/JIT warmup (standard bench discipline): run one untimed job
-        # through codegen + the parquet reader + a shuffle so the FIRST timed
-        # query measures its plan, not interpreter-tier JIT and classloading.
-        # Same-shaped warmup for every run, disclosed here and in BENCH.md.
-        from pyspark.sql import functions as F
-
-        spark.range(2_000_000).groupBy((F.col("id") % 16).alias("k")).agg(
-            F.sum("id"), F.avg("id")
-        ).collect()
-        spark.read.parquet(os.path.join(sf_dir, "region.parquet")).count()
-        for name in HEADLINE:
-            fn = QUERIES[name]
-            # warm the reader metadata once, then time the full execution
-            t0 = time.time()
-            df = fn(spark, sf_dir)
-            n = df.count()
-            per_query[name] = round(time.time() - t0, 3)
-            _ = n
-
     pipeline_q: dict[str, float] = {}
-    if not args.skip_pipeline:
-        if args.skip_headline:
-            # the warmup normally runs with the headline group; keep the
-            # discipline identical when only this group is timed
-            from pyspark.sql import functions as F
-
-            spark.range(2_000_000).groupBy((F.col("id") % 16).alias("k")).agg(
-                F.sum("id"), F.avg("id")
-            ).collect()
-            spark.read.parquet(os.path.join(sf_dir, "region.parquet")).count()
-        for name in PIPELINE_GROUP:
-            fn = QUERIES[name]
-            t0 = time.time()
-            df = fn(spark, sf_dir)
-            n = df.count()
-            pipeline_q[name] = round(time.time() - t0, 3)
-            _ = n
-
     extras_q: dict[str, float] = {}
     if not (args.skip_headline and args.skip_pipeline):
-        # extras ride with whichever pinned group ran (warmup already done);
-        # a reps-only invocation (both groups skipped) stays extras-free so
-        # scaling runs time nothing but the full pass
-        for name in EXTRAS_GROUP:
-            fn = QUERIES[name]
-            t0 = time.time()
-            df = fn(spark, sf_dir)
-            n = df.count()
-            extras_q[name] = round(time.time() - t0, 3)
-            _ = n
+        _warm_up(spark, sf_dir)
+        if not args.skip_headline:
+            per_query = time_queries(spark, sf_dir, HEADLINE)
+        if not args.skip_pipeline:
+            pipeline_q = time_queries(spark, sf_dir, PIPELINE_GROUP)
+        # extras ride with whichever pinned group ran; a reps-only invocation
+        # (both groups skipped) stays extras-free so scaling runs time
+        # nothing but the full pass
+        extras_q = time_queries(spark, sf_dir, EXTRAS_GROUP)
 
     out = {
         "metric": "headline_total",

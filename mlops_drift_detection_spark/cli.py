@@ -116,10 +116,9 @@ def main(argv: list[str] | None = None) -> int:
 
     manifest = None
     if args.manifest_dir:
-        # a resume reuses only results of the same input, baseline and config
-        manifest = CheckpointManifest(
-            args.manifest_dir, lineage={"input": args.input, **suite.lineage()}
-        )
+        # a resume reuses only results of the same input; suite.run adds the
+        # baseline, config and engine version
+        manifest = CheckpointManifest(args.manifest_dir, lineage={"input": args.input})
 
     t0 = time.time()
     # output is persisted PER WAVE inside run() (durable before each manifest

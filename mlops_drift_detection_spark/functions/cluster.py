@@ -110,20 +110,3 @@ def connected_components(edges: DataFrame, max_iterations: int = 50) -> DataFram
     members = e.select(F.col("src").alias("id"), F.col("dst").alias("component"))
     roots = e.select(F.col("dst").alias("id"), F.col("dst").alias("component")).distinct()
     return members.union(roots).distinct()
-
-
-def neardup_clusters(
-    df: DataFrame, id_col: str, pairs: DataFrame
-) -> DataFrame:
-    """(id, cluster_id) for EVERY row of ``df``: nodes of the ``pairs`` graph
-    (columns id_a/id_b) get their component minimum, everything else is its
-    own singleton cluster. One broadcast-or-shuffle left join against the
-    (small) component map — the full table is never part of the iteration."""
-    cc = connected_components(
-        pairs.select(F.col("id_a").alias("src"), F.col("id_b").alias("dst"))
-    )
-    return (
-        df.select(F.col(id_col).alias("id"))
-        .join(cc, "id", "left")
-        .select("id", F.coalesce("component", F.col("id")).alias("cluster_id"))
-    )

@@ -4,7 +4,6 @@ All variants are shuffle-shaped for 100 TB: candidate generation is always a
 key-partitioned groupBy/join (never an all-pairs cross product), and hashing
 stays JVM-side (`xxhash64`, `sha2`, `md5`, `hash`) — no Python UDFs.
 
-* exact_duplicates / dedup_exact — hash-groupBy on content digest.
 * minhash_lsh_candidates — shingle -> K minhashes -> B bands -> bucket join.
   Shuffle volume is O(rows x B), candidates only within equal band-buckets.
 * simhash64_native — 64-bit SimHash entirely JVM-side (md5 token hashes —
@@ -19,41 +18,13 @@ stays JVM-side (`xxhash64`, `sha2`, `md5`, `hash`) — no Python UDFs.
   probability; rarest-first global gram order keeps prefix buckets small.
 
 Pair output feeds functions/cluster.py (connected components) for the
-cluster-assignment stage, and dedup_exact/keep-min picks survivors.
+cluster-assignment stage.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-
-
-def content_digest(col: Column) -> Column:
-    """Stable 256-bit digest for exact dedup (JVM-side sha2)."""
-    return F.sha2(col, 256)
-
-
-def exact_duplicates(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
-    """Groups of identical content: digest, multiplicity, member ids.
-    One shuffle keyed on the digest; map-side combine keeps it lean."""
-    return (
-        df.select(content_digest(F.col(text_col)).alias("digest"), F.col(id_col).alias("id"))
-        .groupBy("digest")
-        .agg(F.count(F.lit(1)).alias("n"), F.sort_array(F.collect_list("id")).alias("ids"))
-        .where(F.col("n") > 1)
-    )
-
-
-def dedup_exact(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
-    """Keep the min-id row per identical content (deterministic winner).
-    Implemented as groupBy(digest).min(id) + semi join — no window sort over
-    the full data, so no skew from a mega-duplicate cluster."""
-    winners = (
-        df.select(content_digest(F.col(text_col)).alias("digest"), F.col(id_col).alias(id_col))
-        .groupBy("digest")
-        .agg(F.min(id_col).alias(id_col))
-    )
-    return df.join(winners.select(id_col), on=id_col, how="left_semi")
 
 
 def shingles(col: Column, k: int = 5) -> Column:
@@ -63,20 +34,6 @@ def shingles(col: Column, k: int = 5) -> Column:
     idx = F.sequence(F.lit(0), F.greatest(n - k, F.lit(0)))
     return F.when(n >= k, F.transform(idx, lambda i: F.array_join(F.slice(toks, i + 1, k), " "))).otherwise(
         F.array(F.array_join(toks, " "))
-    )
-
-
-def minhash_signature(shingle_col: Column, num_hashes: int = 64) -> Column:
-    """K minhash values per row, all JVM-side: for seed s, min over shingles of
-    xxhash64(shingle, s). array<bigint> length K.
-
-    Implemented as ONE nested higher-order transform over a seed sequence —
-    not K separate array_min expressions — so the generated code stays small
-    (K unrolled lambdas blow up codegen compile time ~50x for K=64)."""
-    seeds = F.sequence(F.lit(0), F.lit(num_hashes - 1))
-    return F.transform(
-        seeds,
-        lambda s: F.array_min(F.transform(shingle_col, lambda sh: F.xxhash64(sh, s))),
     )
 
 
@@ -182,10 +139,9 @@ def minhash_lsh_candidates(
     cached intermediate to leak, and the quadratic in-bucket work is
     explicitly bounded by ``max_bucket_size`` — a degenerate bucket (empty/
     boilerplate docs all hashing together) is dropped instead of going
-    O(b^2). Use ``oversized_bucket_stats`` to count what a cap would drop
-    (dropped members are by construction near-identical boilerplate — the
-    usual policy at 100 TB is to route them to the exact-dedup pass, which
-    `dedup_exact` handles in one linear shuffle).
+    O(b^2). Dropped members are by construction near-identical boilerplate;
+    the usual policy at 100 TB is to route them to an exact-dedup pass (one
+    linear shuffle on a content digest).
     """
     buckets = (
         band_bucket_keys(df, text_col, id_col, num_hashes, bands, shingle_k)
@@ -199,26 +155,6 @@ def minhash_lsh_candidates(
         buckets.select(F.explode(_pairs_from_sorted_ids(F.col("ids"))).alias("p"))
         .select("p.id_a", "p.id_b")
         .distinct()
-    )
-
-
-def oversized_bucket_stats(
-    df: DataFrame,
-    text_col: str,
-    id_col: str,
-    num_hashes: int = 64,
-    bands: int = 16,
-    shingle_k: int = 5,
-    max_bucket_size: int = 1000,
-) -> DataFrame:
-    """(band, bucket, size) for band buckets a cap would drop — the audit
-    side of ``max_bucket_size``: run it alongside capped candidate
-    generation and log/count the result so truncation is never silent."""
-    return (
-        band_bucket_keys(df, text_col, id_col, num_hashes, bands, shingle_k)
-        .groupBy("band", "bucket")
-        .agg(F.count(F.lit(1)).alias("size"))
-        .where(F.col("size") > max_bucket_size)
     )
 
 
@@ -300,8 +236,7 @@ def prefix_filter_jaccard_join(
     never a self-join — and (4) the verification joins. Every stage is
     key-partitioned and linear except the in-bucket quadratic, which prefix
     theory keeps small (a gram only lands in a prefix when rare-for-its-doc)
-    and ``max_token_bucket`` caps explicitly; audit what a cap drops with
-    :func:`prefix_bucket_stats` so truncation is never silent.
+    and ``max_token_bucket`` caps explicitly.
     """
     _check_threshold(threshold)
     sets = df.select(
@@ -336,43 +271,6 @@ def prefix_filter_jaccard_join(
     )
     return ngram_jaccard(df, cands, text_col, id_col, n=n).where(
         F.col("jaccard") >= threshold
-    )
-
-
-def prefix_bucket_stats(
-    df: DataFrame,
-    text_col: str,
-    id_col: str,
-    threshold: float,
-    n: int = 3,
-    max_token_bucket: int = 1000,
-) -> DataFrame:
-    """(gram, size) for prefix-gram buckets a cap would drop — the audit twin
-    of ``max_token_bucket`` in :func:`prefix_filter_jaccard_join` (same
-    pattern as ``oversized_bucket_stats`` for minhash)."""
-    _check_threshold(threshold)
-    sets = df.select(
-        F.col(id_col).alias("id"),
-        F.array_distinct(shingles(F.col(text_col), n)).alias("grams"),
-    )
-    toks = sets.select("id", F.size("grams").alias("sz"), F.explode("grams").alias("g"))
-    freq = toks.groupBy("g").agg(F.count(F.lit(1)).alias("df"))
-    ordered = (
-        toks.join(freq, "g")
-        .groupBy("id", "sz")
-        .agg(F.array_sort(F.collect_list(F.struct("df", "g"))).alias("og"))
-    )
-    plen = (F.col("sz") - F.ceil(F.lit(threshold) * F.col("sz")) + 1).cast("int")
-    return (
-        ordered.select(
-            "id",
-            F.explode(
-                F.slice(F.transform("og", lambda s: s["g"]), F.lit(1), plen)
-            ).alias("g"),
-        )
-        .groupBy("g")
-        .agg(F.count(F.lit(1)).alias("size"))
-        .where(F.col("size") > max_token_bucket)
     )
 
 

@@ -62,28 +62,6 @@ FEATURE_SCHEMA = StructType(
 )
 
 
-def synth_media(spark, n: int = 64, seed: int = 42) -> DataFrame:
-    """Deterministic fake media table (binary payload derived from the id)."""
-    df = spark.range(n)
-    kind = F.element_at(
-        F.array(F.lit("image"), F.lit("audio"), F.lit("video")),
-        (F.pmod(F.col("id"), F.lit(3)) + 1).cast("int"),
-    )
-    payload = F.encode(
-        F.concat(F.lit("blob-"), F.sha2(F.concat(F.col("id").cast("string"), F.lit(seed)), 256)),
-        "utf-8",
-    )
-    return df.select(
-        F.col("id").alias("media_id"),
-        kind.alias("kind"),
-        F.lit("application/octet-stream").alias("mime"),
-        F.when(kind == "image", (F.pmod(F.col("id"), F.lit(8)) + 1) * 64).otherwise(F.lit(-1)).cast("long").alias("width"),
-        F.when(kind == "image", (F.pmod(F.col("id"), F.lit(4)) + 1) * 64).otherwise(F.lit(-1)).cast("long").alias("height"),
-        F.when(kind != "image", (F.pmod(F.col("id"), F.lit(30)) + 1) * 1000).otherwise(F.lit(-1)).cast("long").alias("duration_ms"),
-        payload.alias("payload"),
-    )
-
-
 def media_from_documents(
     docs: DataFrame, id_col: str = "doc_id", text_col: str = "text"
 ) -> DataFrame:
@@ -409,33 +387,3 @@ def media_decode_stats(media: DataFrame, feature_dim: int = 16) -> DataFrame:
             yield pd.DataFrame(rows)
 
     return media.mapInPandas(_batches, schema=DECODE_STATS_SCHEMA)
-
-
-def resize_spec(media: DataFrame, max_side: int = 256) -> DataFrame:
-    """Resize planning is pure metadata math — stays JVM-side; only the pixel
-    work (stubbed) would enter Python."""
-    scale = F.when(
-        (F.col("width") > 0) & (F.col("height") > 0),
-        F.least(
-            F.lit(max_side) / F.col("width"), F.lit(max_side) / F.col("height"), F.lit(1.0)
-        ),
-    ).otherwise(F.lit(1.0))
-    return media.select(
-        "media_id",
-        "kind",
-        scale.alias("scale"),
-        F.floor(F.col("width") * scale).cast("long").alias("out_width"),
-        F.floor(F.col("height") * scale).cast("long").alias("out_height"),
-    )
-
-
-def frame_sample_plan(media: DataFrame, every_ms: int = 1000) -> DataFrame:
-    """Frame-sampling plan for time-based media: explode deterministic
-    timestamps (JVM sequence); the decode of each frame is the stubbed part."""
-    frames = F.when(
-        F.col("duration_ms") > 0,
-        F.sequence(F.lit(0), F.col("duration_ms") - 1, F.lit(every_ms)),
-    ).otherwise(F.array().cast("array<bigint>"))
-    return media.select(
-        "media_id", "kind", F.explode_outer(frames).alias("frame_ts_ms")
-    )

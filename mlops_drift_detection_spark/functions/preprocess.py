@@ -2,84 +2,23 @@
 re-expressed as reusable, vectorized DataFrame transforms.
 
 Reference mapping (SURVEY.md §2.2/2.7):
-* derived ratio columns   — src/api/preprocessing.py:44-48
-* one-hot with a FIXED category set — data_preprocessing_no_indicators.py:144-157
-  (pd.get_dummies discovers categories from data — nondeterministic column
-  sets across batches; a fixed set keeps the schema stable, which is the
-  J2 alignment bug the reference patches at preprocessing.py:63-68)
-* standardize fit/transform — data_preprocessing_no_indicators.py:159-187
-* median/mode impute — data_preprocessing.py:91-117
+* drop_null_rows — dropna(), data_preprocessing.py:122-133
 * align_to_template — preprocessing.py:63-68 (missing -> 0, fixed order)
+* hash_split — deterministic train/val/test split (data_preprocessing.py:265-307)
+* weighted_sample — deterministic A-ES weighted sampling (no reference
+  counterpart; retry-safe md5 uniforms)
 
-All fits are single aggregate passes returning tiny dicts (broadcast as plan
-literals); transforms are pure projections — no shuffle, no Python.
+The reference's derived ratios, one-hot, standardize and impute steps are
+catalog queries (queries.py) over the same DataFrame API. None of the
+operators here runs Python.
 """
 
 from __future__ import annotations
 
-from collections.abc import Mapping, Sequence
+from collections.abc import Sequence
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-
-def derive_ratio(
-    df: DataFrame, out_col: str, num: str, den: str, scale: float = 1.0
-) -> DataFrame:
-    """num/den * scale with the reference's zero-denominator guard
-    (0 -> NULL, data_preprocessing_no_indicators.py:118-139)."""
-    return df.withColumn(
-        out_col,
-        F.col(num) / F.nullif(F.col(den), F.lit(0)) * F.lit(scale),
-    )
-
-
-def one_hot(
-    df: DataFrame, column: str, categories: Sequence[str], drop_first: bool = True
-) -> DataFrame:
-    """One-hot encode against a FIXED category list: deterministic columns
-    `{column}_{cat}` (0/1 int); unknown AND NULL categories encode as
-    all-zeros (eqNullSafe — plain `==` yields NULL for NULL input, which
-    would poison downstream standardize/align; pd.get_dummies gives NaN rows
-    all-zero dummies, reference data_preprocessing_no_indicators.py:144-157)."""
-    cats = list(categories)[1:] if drop_first else list(categories)
-    out = df
-    for c in cats:
-        out = out.withColumn(
-            f"{column}_{c}", F.col(column).eqNullSafe(F.lit(c)).cast("int")
-        )
-    return out
-
-
-def standardize_fit(
-    df: DataFrame, cols: Sequence[str], population: bool = False
-) -> dict[str, tuple[float, float]]:
-    """One aggregate pass -> {col: (mean, std)}.
-
-    ``population=True`` uses stddev_pop (ddof=0) — parity with sklearn's
-    StandardScaler on the reference's scaling path
-    (data_preprocessing_no_indicators.py:176). The default stddev_samp
-    (ddof=1) matches the reference's baseline std
-    (baseline_calculator.py:64); pick per which artifact you reproduce."""
-    std = F.stddev_pop if population else F.stddev_samp
-    aggs = []
-    for c in cols:
-        aggs += [F.avg(c).alias(f"__m_{c}"), std(c).alias(f"__s_{c}")]
-    row = df.agg(*aggs).first()
-    return {c: (row[f"__m_{c}"], row[f"__s_{c}"]) for c in cols}
-
-
-def standardize_transform(
-    df: DataFrame, stats: Mapping[str, tuple[float, float]]
-) -> DataFrame:
-    """(col - mean) / std projection; std<=0 -> 0.0 (degenerate column)."""
-    out = df
-    for c, (m, s) in stats.items():
-        if s is None or s <= 0:
-            out = out.withColumn(c, F.lit(0.0))
-        else:
-            out = out.withColumn(c, (F.col(c) - F.lit(m)) / F.lit(s))
-    return out
 
 
 def drop_null_rows(
@@ -90,40 +29,6 @@ def drop_null_rows(
     columns when None). ``how='any'|'all'`` as pandas. Pure filter — stays
     in the scan's pushdown path."""
     return df.na.drop(how=how, subset=list(cols) if cols else None)
-
-
-def impute_fit(
-    df: DataFrame,
-    numeric_cols: Sequence[str] = (),
-    categorical_cols: Sequence[str] = (),
-) -> dict[str, object]:
-    """Median for numerics (percentile_approx at scale), mode for
-    categoricals (F.mode; deterministic enough for fill values) — one pass
-    for all numerics, one tiny groupBy per categorical."""
-    fills: dict[str, object] = {}
-    if numeric_cols:
-        aggs = [
-            F.expr(f"percentile_approx({c}, 0.5, 10000)").alias(c)
-            for c in numeric_cols
-        ]
-        row = df.agg(*aggs).first()
-        for c in numeric_cols:
-            fills[c] = row[c]
-    for c in categorical_cols:
-        top = (
-            df.where(F.col(c).isNotNull())
-            .groupBy(c)
-            .agg(F.count(F.lit(1)).alias("n"))
-            .orderBy(F.desc("n"), F.asc(c))
-            .first()
-        )
-        if top is not None:
-            fills[c] = top[c]
-    return fills
-
-
-def impute_transform(df: DataFrame, fills: Mapping[str, object]) -> DataFrame:
-    return df.na.fill(dict(fills))
 
 
 def align_to_template(

@@ -388,8 +388,7 @@ def embedding_neardup_pairs(
     (e.g. a mass of collinear vectors — all sign bits equal) otherwise goes
     O(b^2). Oversized buckets are dropped BEFORE pairing (a semi-join
     against the bucket-size table), mirroring the minhash/simhash caps
-    (dedup.py); run :func:`embedding_oversized_bucket_stats` alongside so
-    the truncation is audited, never silent."""
+    (dedup.py)."""
     if dim is None:
         first = df.select(F.size(vec_col).alias("d")).first()
         dim = int(first["d"])
@@ -418,29 +417,4 @@ def embedding_neardup_pairs(
         .where(F.col("cosine") >= threshold)
         .groupBy("id_a", "id_b")
         .agg(F.round(F.max("cosine"), 6).alias("cosine"))
-    )
-
-
-def embedding_oversized_bucket_stats(
-    df: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    planes: int = 10,
-    tables: int = 1,
-    seed: int = 42,
-    dim: int | None = None,
-    max_bucket_size: int = 1000,
-) -> DataFrame:
-    """(tbl, bucket, size) for LSH buckets the near-dup cap would drop —
-    the audit twin of ``embedding_neardup_pairs(max_bucket_size=...)``
-    (mirrors dedup.oversized_bucket_stats)."""
-    if dim is None:
-        first = df.select(F.size(vec_col).alias("d")).first()
-        dim = int(first["d"])
-    matrix = make_hyperplanes(dim, planes, tables, seed)
-    return (
-        lsh_keys(df, id_col, vec_col, matrix, planes)
-        .groupBy("tbl", "bucket")
-        .agg(F.count(F.lit(1)).alias("size"))
-        .where(F.col("size") > max_bucket_size)
     )

@@ -4,8 +4,8 @@
 * quality_score — length / punctuation / stopword-ratio composite.
 * language_id — n-gram/stopword-hit heuristic over a small profile table
   (deterministic; no external models).
-* doc_fingerprint — stable content fingerprint (md5) + a rolling-hash
-  32-shingle fingerprint for fuzzy identity.
+* doc_fingerprint / wordset_fingerprint / winnow_fingerprints — exact,
+  bag-of-words and winnowed (fuzzy) content fingerprints.
 
 Everything is a Column expression usable inside any plan (no UDFs), so these
 compose with dedup/drift passes for free and stay in whole-stage codegen.
@@ -13,7 +13,7 @@ compose with dedup/drift passes for free and stay in whole-stage codegen.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 STOPWORDS = {
@@ -123,21 +123,6 @@ def wordset_fingerprint(col: Column) -> Column:
     return F.md5(F.array_join(F.array_sort(F.array_distinct(toks)), " "))
 
 
-def rolling_fingerprint(col: Column, k: int = 8, keep: int = 4) -> Column:
-    """Fuzzy fingerprint: min-k of xxhash64 over k-shingles (a winnowing-style
-    scheme) packed to a string. Equal fingerprints -> near-identical prefixes."""
-    toks = F.split(F.trim(F.lower(col)), "\\s+")
-    n = F.size(toks)
-    idx = F.sequence(F.lit(0), F.greatest(n - k, F.lit(0)))
-    hashes = F.transform(
-        idx, lambda i: F.xxhash64(F.array_join(F.slice(toks, i + 1, k), " "))
-    )
-    return F.array_join(
-        F.transform(F.slice(F.array_sort(hashes), 1, keep), lambda h: F.conv(h.cast("string"), 10, 16)),
-        "-",
-    )
-
-
 def winnow_fingerprints(col: Column, k: int = 8, w: int = 4) -> Column:
     """Winnowing fingerprint set (Schleimer, Wilkerson & Aiken, "Winnowing:
     Local Algorithms for Document Fingerprinting", SIGMOD'03 — the MOSS
@@ -233,25 +218,6 @@ def dup_word_frac(col: Column) -> Column:
     ).otherwise(F.lit(0.0))
 
 
-def bigram_array(col: Column) -> Column:
-    """Adjacent token 2-grams as 'tok_i tok_i+1' strings (empty array for
-    docs with < 2 tokens). Feed to explode + groupBy for corpus-scale n-gram
-    frequency work — the per-doc MODE of this multiset is what the Gopher
-    top-n-gram rule thresholds, and a mode is a shuffle aggregation, not a
-    per-row expression, once docs get long."""
-    toks = _tokens(col)
-    n = F.size(toks)
-    return F.when(
-        n >= 2,
-        F.transform(
-            F.sequence(F.lit(1), n - 1),
-            lambda i: F.concat(
-                F.element_at(toks, i), F.lit(" "), F.element_at(toks, i + 1)
-            ),
-        ),
-    ).otherwise(F.array().cast("array<string>"))
-
-
 def bigram_structs(tok_col: Column) -> Column:
     """Adjacent-token bigrams as ``array<struct>`` built by zipping two
     shifted slices — `arrays_zip`/`slice` are native whole-stage-codegen
@@ -275,32 +241,3 @@ def shingle_structs(tok_col: Column, k: int = 8) -> Column:
     (decontamination semantics: too short to contain the probe n-gram)."""
     m = F.greatest(F.size(tok_col) - k + 1, F.lit(0))
     return F.arrays_zip(*[F.slice(tok_col, i + 1, m) for i in range(k)])
-
-
-def token_shingles(col: Column, k: int = 8) -> Column:
-    """Rolling k-token shingles as 'tok_i .. tok_i+k-1' strings; EMPTY array
-    for docs with < k tokens (decontamination semantics: a doc too short to
-    contain the probe n-gram cannot collide with it — unlike
-    ``dedup.shingles``, which falls back to the whole text so every doc has
-    at least one minhash input)."""
-    toks = _tokens(col)
-    n = F.size(toks)
-    return F.when(
-        n >= k,
-        F.transform(
-            F.sequence(F.lit(1), n - k + 1),
-            lambda i: F.array_join(F.slice(toks, i, k), " "),
-        ),
-    ).otherwise(F.array().cast("array<string>"))
-
-
-def text_profile(df: DataFrame, text_col: str, group_cols: list[str]) -> DataFrame:
-    """One-pass per-group text profile used by pipeline audits."""
-    c = F.col(text_col)
-    return df.groupBy(*group_cols).agg(
-        F.count(F.lit(1)).alias("n_docs"),
-        F.round(F.avg(F.length(c)), 4).alias("avg_chars"),
-        F.round(F.avg(token_count(c)), 4).alias("avg_tokens"),
-        F.round(F.avg(punct_ratio(c)), 6).alias("avg_punct_ratio"),
-        F.round(F.avg(quality_score(c)), 6).alias("avg_quality"),
-    )

@@ -205,9 +205,7 @@ def fused_row_violations(df: DataFrame, rules: Sequence[RowRule]) -> DataFrame:
 
 def empty_violations(spark) -> DataFrame:
     return spark.createDataFrame(
-        [],
-        "partition string, check string, column string, repo string, "
-        "path string, commit string, detail string",
+        [], ", ".join(f"{c} string" for c in VIOLATION_COLS)
     )
 
 

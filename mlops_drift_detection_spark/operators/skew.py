@@ -1,11 +1,10 @@
 """Skew-handling helpers: salted two-phase aggregation.
 
-north_rule: "Salted repartitioning handles skewed mega-repos (a single repo
-dominating content rows)." For algebraic aggregates Spark's map-side partial
-aggregation already neutralizes key skew; salting matters when a single key's
-*reduce-side* state is heavy (high-cardinality collect, big per-key sort) or
-when repartitioning by a skewed key for downstream co-location. These helpers
-make the pattern explicit and testable:
+The engine's own skewed join, the referential anti-join, is left to AQE's
+skew-join split in the plan. For algebraic aggregates Spark's map-side
+partial aggregation already neutralizes key skew; salting matters when a
+single key's *reduce-side* state is heavy (high-cardinality collect, big
+per-key sort). This makes the pattern explicit and testable:
 
   phase 1: groupBy(key, salt) partial aggregate  (salt = hash(row) % S)
   phase 2: groupBy(key) final merge
@@ -47,28 +46,4 @@ def salted_agg(
     )
     return partial.groupBy(*keys).agg(
         *[c.alias(n) for n, c in final_aggs.items()]
-    )
-
-
-def salted_count(
-    df: DataFrame, keys: Sequence[str], salt_cols: Sequence[str], salt_buckets: int = 16
-) -> DataFrame:
-    """Two-phase count-by-key that survives a mega-key: ``keys..., n``."""
-    return salted_agg(
-        df,
-        keys,
-        {"__c": F.count(F.lit(1))},
-        {"n": F.sum("__c")},
-        salt_cols,
-        salt_buckets,
-    )
-
-
-def repartition_salted(
-    df: DataFrame, key: str, salt_cols: Sequence[str], salt_buckets: int, n_partitions: int
-) -> DataFrame:
-    """Repartition by (key, salt) so a mega-key spreads over ``salt_buckets``
-    tasks instead of hot-spotting one (SURVEY.md §4 skew row)."""
-    return df.repartition(
-        n_partitions, F.col(key), salt_column(salt_cols, salt_buckets)
     )

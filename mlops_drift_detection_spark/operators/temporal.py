@@ -21,8 +21,7 @@ history in one task. That is inherent to per-key ordered semantics; for a
 pathological hot key, :func:`sessionize_split` pre-splits each key's
 timeline into fixed time chunks (per-(key, chunk) local sessions, then a
 boundary stitch over the tiny per-chunk summary) so a 1M-event key fans out
-across tasks — the suite's salting utilities (operators/skew.py) cover the
-aggregation-side variant. Time comparisons use integer microseconds
+across tasks. Time comparisons use integer microseconds
 (``unix_micros``) so the DuckDB oracles (``epoch_us``) reproduce them
 exactly.
 """
@@ -241,53 +240,6 @@ def interval_join(
     )
 
 
-def interval_bucket_stats(
-    left: DataFrame,
-    right: DataFrame,
-    left_ts: str,
-    start_ts: str,
-    end_ts: str,
-    bucket_seconds: int,
-    max_candidates: int = 1_000_000,
-) -> DataFrame:
-    """Audit twin of :func:`interval_join`'s time bucketing (same pattern as
-    ``dedup.oversized_bucket_stats`` for LSH band buckets): one row per time
-    bucket whose candidate load — ``n_left x n_intervals`` equi-join pairs
-    the residual predicate must then filter — exceeds ``max_candidates``.
-
-    A pathological overlap window (an interval spanning far more than
-    ``bucket_seconds``, or many intervals piling onto one hot bucket) shows
-    up here BEFORE the join runs: both inputs are column-pruned to their
-    timestamp columns, so this is two narrow scans + two tiny aggregations.
-    Run it alongside ``interval_join`` and alert on any row, so a quadratic
-    bucket is never silent. Empty result == every bucket is within budget.
-    """
-    b = F.lit(bucket_seconds * 1_000_000)
-    lcnt = (
-        left.select(F.floor(_micros(F.col(left_ts)) / b).alias("bucket"))
-        .groupBy("bucket")
-        .agg(F.count(F.lit(1)).alias("n_left"))
-    )
-    rcnt = (
-        right.select(
-            F.explode(
-                F.sequence(
-                    F.floor(_micros(F.col(start_ts)) / b),
-                    F.floor(_micros(F.col(end_ts)) / b),
-                )
-            ).alias("bucket")
-        )
-        .groupBy("bucket")
-        .agg(F.count(F.lit(1)).alias("n_intervals"))
-    )
-    return (
-        lcnt.join(rcnt, "bucket")
-        .withColumn("candidates", F.col("n_left") * F.col("n_intervals"))
-        .where(F.col("candidates") > F.lit(max_candidates))
-        .select("bucket", "n_left", "n_intervals", "candidates")
-    )
-
-
 def sessionize(df: DataFrame, key: str, ts: str, gap_seconds: int) -> DataFrame:
     """Adds ``session_id`` (0-based per key, in time order): a new session
     starts when the gap since the key's previous event STRICTLY EXCEEDS
@@ -388,120 +340,3 @@ def sessionize_split(
         .drop("__chunk", "__local", "__merge", "__off")
     )
 
-
-# ---------------------------------------------------------------------------
-# Auto hot-key dispatch (VERDICT r4 #6): make the safe plan the default.
-# ---------------------------------------------------------------------------
-
-
-def detect_hot_keys(
-    df: DataFrame,
-    key: str,
-    hot_threshold: int,
-    sample_fraction: float | None = None,
-) -> list:
-    """Keys whose (estimated) row count meets ``hot_threshold``.
-
-    One cheap aggregation: the probe is column-pruned to just ``key`` at the
-    scan, optionally row-sampled (counts are scaled back by
-    ``1 / sample_fraction``, so the threshold stays in full-data units; the
-    sample seed is fixed for determinism). The result is collected to the
-    driver — safe by construction: at most ``total_rows / hot_threshold``
-    keys can exceed the threshold, so the list is small exactly when the
-    threshold is large enough to matter (1e12 rows / 1e7 threshold ->
-    <= 1e5 keys). NULL keys are never reported hot (a NULL key group is a
-    data-quality problem for the constraint suite, not a dispatch target).
-    """
-    probe = df.select(key).where(F.col(key).isNotNull())
-    scale = 1.0
-    if sample_fraction is not None and sample_fraction < 1.0:
-        probe = probe.sample(fraction=sample_fraction, seed=7)
-        scale = 1.0 / sample_fraction
-    hot = (
-        probe.groupBy(key)
-        .count()
-        .where(F.col("count") * F.lit(scale) >= F.lit(float(hot_threshold)))
-        .select(key)
-        .collect()
-    )
-    return [r[0] for r in hot]
-
-
-def sessionize_auto(
-    df: DataFrame,
-    key: str,
-    ts: str,
-    gap_seconds: int,
-    chunk_seconds: int,
-    hot_threshold: int = 5_000_000,
-    sample_fraction: float | None = None,
-) -> DataFrame:
-    """:func:`sessionize`, but keys above ``hot_threshold`` rows are routed
-    through :func:`sessionize_split` automatically — the caller no longer
-    needs to know the skew profile for the job to survive a hot key.
-
-    Cost: one key-pruned probe aggregation (sampled if ``sample_fraction``
-    is set), then the two branches filter the same scan (Catalyst pushes
-    the ``isin`` / negated-``isin`` down to parquet). Output is the union
-    of the branches; both produce identical ``session_id`` semantics
-    (property-tested byte-identical), so routing changes the plan, never
-    the answer. With no hot keys detected the plain single-window plan is
-    returned untouched.
-    """
-    hot = detect_hot_keys(df, key, hot_threshold, sample_fraction)
-    if not hot:
-        return sessionize(df, key, ts, gap_seconds)
-    k = F.col(key)
-    hot_part = sessionize_split(
-        df.where(k.isin(hot)), key, ts, gap_seconds, chunk_seconds
-    )
-    cold_part = sessionize(
-        df.where(k.isNull() | ~k.isin(hot)), key, ts, gap_seconds
-    )
-    return hot_part.unionByName(cold_part)
-
-
-def asof_join_auto(
-    left: DataFrame,
-    right: DataFrame,
-    on: str,
-    left_ts: str,
-    right_ts: str,
-    value_cols: list[str],
-    chunk_seconds: int,
-    tolerance_seconds: float | None = None,
-    hot_threshold: int = 5_000_000,
-    sample_fraction: float | None = None,
-) -> DataFrame:
-    """:func:`asof_join` with automatic hot-key routing (same contract as
-    :func:`sessionize_auto`). A key is hot when its COMBINED left+right row
-    count meets ``hot_threshold`` — the per-key window in the union trick
-    sorts both sides together, so skew on either side matters.
-    """
-    probe = left.select(F.col(on)).unionAll(right.select(F.col(on)))
-    hot = detect_hot_keys(probe, on, hot_threshold, sample_fraction)
-    if not hot:
-        return asof_join(
-            left, right, on, left_ts, right_ts, value_cols, tolerance_seconds
-        )
-    k = F.col(on)
-    hot_part = asof_join_split(
-        left.where(k.isin(hot)),
-        right.where(k.isin(hot)),
-        on,
-        left_ts,
-        right_ts,
-        value_cols,
-        chunk_seconds,
-        tolerance_seconds,
-    )
-    cold_part = asof_join(
-        left.where(k.isNull() | ~k.isin(hot)),
-        right.where(k.isNull() | ~k.isin(hot)),
-        on,
-        left_ts,
-        right_ts,
-        value_cols,
-        tolerance_seconds,
-    )
-    return hot_part.unionByName(cold_part)

@@ -9,8 +9,9 @@ tmp-then-``os.replace`` (:func:`replace_atomically`) so a kill mid-write
 never leaves a torn entry (the same atomicity discipline as a Spark/Iceberg
 commit; on HDFS/S3 this maps to a rename-based or Iceberg-append commit). A
 partition is "complete" iff its file exists and parses. Manifest entries
-carry lineage (input fingerprint, engine version, baseline hash) so a resume
-against CHANGED inputs refuses to skip — silent staleness is worse than
+carry lineage (the input path from the CLI; the engine version and the
+baseline and config digests from ``ValidationSuite.run``) so a resume
+against a CHANGED setup refuses to skip — silent staleness is worse than
 recomputation.
 """
 

@@ -43,6 +43,7 @@ from dataclasses import asdict, dataclass, field
 from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
+from mlops_drift_detection_spark import __version__
 from mlops_drift_detection_spark.baseline import BaselineSnapshot, compute_baseline
 from mlops_drift_detection_spark.operators import constraints as C
 from mlops_drift_detection_spark.operators.drift import (
@@ -142,11 +143,14 @@ class ValidationSuite:
         )
 
     def lineage(self) -> dict[str, str]:
-        """Manifest lineage of this suite's results: a sha256 of the
-        canonical baseline JSON and a digest of every config field. A resume
-        under a manifest whose entries carry other values recomputes."""
+        """Manifest lineage of this suite's results: the engine version, a
+        sha256 of the canonical baseline JSON and a digest of every config
+        field. :meth:`run` checks and stamps it on top of the manifest's own
+        lineage, so a resume under entries that carry other values
+        recomputes."""
         config = json.dumps(asdict(self.config), sort_keys=True)
         return {
+            "engine_version": __version__,
             "baseline_sha256": self.baseline.sha256(),
             "config_sha256": hashlib.sha256(config.encode()).hexdigest(),
         }
@@ -283,7 +287,10 @@ class ValidationSuite:
     ) -> SuiteResult:
         """Full pass. With a manifest, partitions are processed in ``n_waves``
         groups and each finished wave is checkpointed; ``resume=True`` skips
-        lineage-compatible completed partitions. The violations and verdicts
+        completed partitions whose entry lineage matches the manifest's
+        lineage plus :meth:`lineage` (so even a manifest built without a
+        lineage never reuses results of another baseline, config or engine
+        version). The violations and verdicts
         plans are built once per run, and each wave filters them to its
         partitions. If the input is physically partitioned by ``part_id``
         (see :meth:`with_partition`) that filter reaches the scan and the
@@ -337,8 +344,12 @@ class ValidationSuite:
         else:
             all_parts = list(range(self.config.n_partition_buckets))
         skipped_i: list[int] = []
-        if manifest is not None and resume:
-            skipped_i = [p for p in all_parts if manifest.is_complete(str(p))]
+        if manifest is not None:
+            lineage = {**manifest.lineage, **self.lineage()}
+            if resume:
+                skipped_i = [
+                    p for p in all_parts if manifest.is_complete(str(p), lineage)
+                ]
         todo = [p for p in all_parts if p not in skipped_i]
 
         violations_out: DataFrame | None = None
@@ -412,6 +423,7 @@ class ValidationSuite:
                             n_rows=n[f"rows_{p}"],
                             n_violations=n[f"violations_{p}"],
                             checks_run=list(self.config.checks),
+                            lineage=lineage,
                             metrics={
                                 "run_id": run_id,
                                 "drift_alarms": n[f"alarms_{p}"],

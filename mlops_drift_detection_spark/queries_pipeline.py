@@ -546,8 +546,7 @@ def q_embedding_neardup_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     same bucketing spec mirrored in SQL (identical hyperplane literals);
     the exhaustive baseline is embedding_neardup_exact. The in-bucket
     pairing is capped at NEARDUP_MAX_BUCKET members (degenerate buckets
-    dropped before the O(b^2) join, audited by
-    embedding_oversized_bucket_stats); the oracle mirrors the cap with the
+    dropped before the O(b^2) join); the oracle mirrors the cap with the
     same literal."""
     emb = _t(spark, sf_dir, "embeddings")
     return embedding_neardup_pairs(
@@ -2311,7 +2310,7 @@ def q_ngram_jaccard_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     Because the operator is exact and complete, the oracle does NOT mirror
     the candidate machinery: it is the exhaustive all-pairs Jaccard join —
     any prefix-filter incompleteness would show up as a hash mismatch. The
-    bucket cap (2000, audited via prefix_bucket_stats) cannot trigger here:
+    bucket cap (2000) cannot trigger here:
     a prefix bucket can never exceed the table's 500 rows."""
     from mlops_drift_detection_spark.functions.dedup import (
         prefix_filter_jaccard_join,

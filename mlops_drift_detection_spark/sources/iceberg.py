@@ -27,8 +27,12 @@ source and log sink. This sandbox ships NO iceberg-spark-runtime jar (checked:
       directory layout instead (see plans/suite.py part_id).
 
 At 100 TB the real runtime is mandatory (manifest pruning + atomic commits
-on object storage); the engine's call sites only touch this interface, so
-swapping the emulation for the runtime is a config change, not a code change.
+on object storage). No engine path calls this module yet: the suite, CLI and
+streaming read parquet paths, and only the tests drive the adapter. It is
+kept as the table-format interface the engine's reads are meant to move
+behind, and its snapshot id is the candidate input fingerprint for resume
+lineage. Behind it, swapping the emulation for the runtime is a config
+change, not a code change.
 """
 
 from __future__ import annotations

@@ -87,29 +87,6 @@ def write_table(
         raise ValueError(f"unsupported format: {fmt}")
 
 
-def write_bucketed(
-    df: DataFrame,
-    table: str,
-    bucket_col: str,
-    num_buckets: int,
-    sort: bool = True,
-) -> None:
-    """Bucketed managed table: pre-shuffles ONCE at write time so every later
-    equi-join/aggregation on ``bucket_col`` between tables sharing the same
-    (column, num_buckets) layout runs WITHOUT an Exchange — the co-located
-    join discipline for repeatedly-joined 100 TB fact tables (hash-partition
-    on write, join for free forever after). ``sort=True`` additionally
-    sorts within buckets so sort-merge joins can skip the per-task Sort when
-    each bucket holds one file. Bucketing requires ``saveAsTable`` (the
-    layout lives in the catalog, not the directory)."""
-    writer = df.write.mode("overwrite").format("parquet").bucketBy(
-        num_buckets, bucket_col
-    )
-    if sort:
-        writer = writer.sortBy(bucket_col)
-    writer.saveAsTable(table)
-
-
 def write_compacted(
     df: DataFrame,
     path: str,

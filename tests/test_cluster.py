@@ -3,10 +3,7 @@
 import pytest
 from pyspark.sql import functions as F
 
-from mlops_drift_detection_spark.functions.cluster import (
-    connected_components,
-    neardup_clusters,
-)
+from mlops_drift_detection_spark.functions.cluster import connected_components
 
 
 def _cc(spark, edge_list, **kw):
@@ -64,16 +61,6 @@ def test_union_find_mirror(spark):
             want[n] = min(m for m in nodes if find(m) == root)
         got = _cc(spark, [e for e in edge_list if e[0] != e[1]])
         assert got == want, f"mismatch on {edge_list}"
-
-
-def test_neardup_clusters_assigns_singletons(spark):
-    docs = spark.createDataFrame([(i,) for i in range(8)], "doc_id long")
-    pairs = spark.createDataFrame([(1, 4), (4, 6)], "id_a long, id_b long")
-    got = {
-        r["id"]: r["cluster_id"]
-        for r in neardup_clusters(docs, "doc_id", pairs).collect()
-    }
-    assert got == {0: 0, 1: 1, 2: 2, 3: 3, 4: 1, 5: 5, 6: 1, 7: 7}
 
 
 def test_nonconvergence_guard(spark):

@@ -1,8 +1,8 @@
-"""Evidence tests for the two big shuffle levers the north rule names:
-AQE skew-join splitting (the referential join's mega-repo case) and bucketed
-co-located joins (pre-shuffled-at-write fact tables). These assert on the
-EXECUTED plan, not just configuration — proving the levers actually engage
-on this engine's session settings.
+"""Evidence tests for the shuffle levers the engine relies on: AQE
+skew-join splitting (the referential join's mega-repo case) and the
+size-governed compaction sink. The skew test asserts on the EXECUTED plan,
+not just configuration — proving the lever actually engages on this
+engine's session settings.
 """
 
 from pyspark.sql import functions as F
@@ -60,39 +60,6 @@ def test_aqe_skew_join_actually_splits(spark):
                 spark.conf.unset(k)
             else:
                 spark.conf.set(k, v)
-
-
-def test_bucketed_join_needs_no_exchange(spark, tmp_path):
-    """Two tables bucketed on the same (key, num_buckets) join with ZERO
-    Exchange in the plan — the write-time shuffle is reused. The same join
-    on plain parquet shuffles both sides (asserted as the control)."""
-    from mlops_drift_detection_spark.sources.io import write_bucketed
-
-    left = spark.range(0, 10_000).select(
-        (F.col("id") % 500).alias("k"), F.col("id").alias("lv")
-    )
-    right = spark.range(0, 2_000).select(
-        (F.col("id") % 500).alias("k"), F.col("id").alias("rv")
-    )
-    saved = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    try:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-
-        # control: plain shuffled join
-        plain = left.join(right, "k")
-        assert _final_plan(plain).count("Exchange") >= 2
-
-        write_bucketed(left, "t_bkt_left", "k", num_buckets=8)
-        write_bucketed(right, "t_bkt_right", "k", num_buckets=8)
-        bl = spark.table("t_bkt_left")
-        br = spark.table("t_bkt_right")
-        plan = _final_plan(bl.join(br, "k"))
-        assert "SortMergeJoin" in plan, plan
-        assert "Exchange" not in plan, f"bucketed join still shuffled:\n{plan}"
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", saved)
-        spark.sql("DROP TABLE IF EXISTS t_bkt_left")
-        spark.sql("DROP TABLE IF EXISTS t_bkt_right")
 
 
 def test_write_compacted_governs_file_sizes(spark, tmp_path):

@@ -3,12 +3,7 @@ groupBy), determinism, and the partition-spread property that motivates it."""
 
 from pyspark.sql import functions as F
 
-from mlops_drift_detection_spark.operators.skew import (
-    repartition_salted,
-    salt_column,
-    salted_agg,
-    salted_count,
-)
+from mlops_drift_detection_spark.operators.skew import salt_column, salted_agg
 
 
 def _skewed(spark, n=20_000):
@@ -20,14 +15,6 @@ def _skewed(spark, n=20_000):
         F.col("id").alias("row_id"),
         (F.col("id") % 13).cast("double").alias("v"),
     )
-
-
-def test_salted_count_equals_plain(spark):
-    df = _skewed(spark)
-    plain = {r["repo"]: r["n"] for r in df.groupBy("repo").agg(F.count(F.lit(1)).alias("n")).collect()}
-    salted = {r["repo"]: r["n"] for r in salted_count(df, ["repo"], ["row_id"], 16).collect()}
-    assert salted == plain
-    assert salted["mega"] == 10_000
 
 
 def test_salted_agg_sum_avg(spark):
@@ -68,16 +55,3 @@ def test_salt_spreads_mega_key(spark):
     assert len(spread) == 16
     fair = 10_000 / 16
     assert max(r["n"] for r in spread) < 2 * fair
-
-
-def test_repartition_salted_spreads_partitions(spark):
-    df = _skewed(spark)
-    parts = (
-        repartition_salted(df, "repo", ["row_id"], salt_buckets=16, n_partitions=16)
-        .where(F.col("repo") == "mega")
-        .select(F.spark_partition_id().alias("p"))
-        .distinct()
-        .count()
-    )
-    # without salt all mega rows land in ONE partition; with salt they spread
-    assert parts > 4

@@ -1,13 +1,11 @@
 """Sources (schema-enforced readers, partitioned log sink) and the
-preprocessing operators (one-hot, standardize, impute, align, hash split)."""
+preprocessing operators (align, hash split, weighted sample)."""
 
 import pytest
 from pyspark.sql import Row
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
-    DoubleType,
     LongType,
-    StringType,
     StructField,
     StructType,
     TimestampType,
@@ -15,13 +13,7 @@ from pyspark.sql.types import (
 
 from mlops_drift_detection_spark.functions.preprocess import (
     align_to_template,
-    derive_ratio,
     hash_split,
-    impute_fit,
-    impute_transform,
-    one_hot,
-    standardize_fit,
-    standardize_transform,
 )
 from mlops_drift_detection_spark.sources import (
     CODE_FILES_SCHEMA,
@@ -61,40 +53,6 @@ def test_append_log_partition_pruning(spark, tmp_path):
     # the date predicate must reach the source as partition pruning
     plan = pruned._jdf.queryExecution().executedPlan().toString()
     assert "PartitionFilters" in plan and "log_date" in plan
-
-
-def test_one_hot_fixed_categories(spark):
-    df = spark.createDataFrame([("a",), ("b",), ("z",)], ["c"])
-    out = one_hot(df, "c", ["a", "b", "d"], drop_first=True)
-    rows = {r["c"]: (r["c_b"], r["c_d"]) for r in out.collect()}
-    assert rows["a"] == (0, 0)  # dropped first category -> all zeros
-    assert rows["b"] == (1, 0)
-    assert rows["z"] == (0, 0)  # unknown category -> all zeros, schema stable
-
-
-def test_standardize_and_impute(spark):
-    df = spark.createDataFrame(
-        [(1.0, "x"), (3.0, "x"), (None, "y"), (5.0, None)],
-        StructType(
-            [StructField("v", DoubleType()), StructField("c", StringType())]
-        ),
-    )
-    fills = impute_fit(df, numeric_cols=["v"], categorical_cols=["c"])
-    assert fills["v"] == 3.0 and fills["c"] == "x"
-    filled = impute_transform(df, fills)
-    assert filled.where(F.col("v").isNull() | F.col("c").isNull()).count() == 0
-
-    stats = standardize_fit(filled, ["v"])
-    z = standardize_transform(filled, stats)
-    agg = z.agg(F.avg("v").alias("m"), F.stddev_samp("v").alias("s")).first()
-    assert abs(agg["m"]) < 1e-12 and abs(agg["s"] - 1.0) < 1e-12
-
-
-def test_derive_ratio_zero_guard(spark):
-    df = spark.createDataFrame([(10.0, 2.0), (5.0, 0.0)], ["n", "d"])
-    out = derive_ratio(df, "r", "n", "d", scale=100.0).collect()
-    got = {r["n"]: r["r"] for r in out}
-    assert got[10.0] == 500.0 and got[5.0] is None
 
 
 def test_align_to_template(spark):

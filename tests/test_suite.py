@@ -481,6 +481,39 @@ def test_resume_refuses_stale_lineage(data, tmp_path):
     assert res.skipped_partitions == []
 
 
+def test_resume_checks_suite_lineage_without_manifest_lineage(data, tmp_path):
+    """A manifest built with no lineage of its own still refuses results of
+    another config: suite.run checks and stamps the suite's lineage itself,
+    so only an unchanged suite skips."""
+    _, cf, cm, baseline = data
+    mdir = str(tmp_path / "manifest")
+    suite = ValidationSuite(baseline, SuiteConfig(n_partition_buckets=4))
+    suite.run(cf, cm, manifest=CheckpointManifest(mdir))
+    same = suite.run(cf, cm, manifest=CheckpointManifest(mdir), resume=True)
+    assert sorted(same.skipped_partitions) == ["0", "1", "2", "3"]
+    changed = ValidationSuite(
+        baseline, SuiteConfig(n_partition_buckets=4, psi_threshold=0.25)
+    )
+    res = changed.run(cf, cm, manifest=CheckpointManifest(mdir), resume=True)
+    assert res.skipped_partitions == []
+
+
+def test_resume_recomputes_under_changed_engine_version(data, tmp_path, monkeypatch):
+    from mlops_drift_detection_spark.plans import suite as suite_mod
+
+    _, cf, cm, baseline = data
+    mdir = str(tmp_path / "manifest")
+    suite = ValidationSuite(baseline, SuiteConfig(n_partition_buckets=4))
+    suite.run(cf, cm, manifest=CheckpointManifest(mdir, {"input": "v1"}))
+    monkeypatch.setattr(suite_mod, "__version__", "0.0.0-other", raising=False)
+    res = suite.run(
+        cf, cm, manifest=CheckpointManifest(mdir, {"input": "v1"}), resume=True
+    )
+    assert res.skipped_partitions == []
+    entries = CheckpointManifest(mdir).completed_partitions()
+    assert {e.lineage["engine_version"] for e in entries} == {"0.0.0-other"}
+
+
 def test_sink_read_excludes_stale_partitions(data, tmp_path):
     """ADVICE r3: the final sink read must be scoped to THIS run's partition
     set. Dynamic partition overwrite never clears untouched directories, so

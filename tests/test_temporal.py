@@ -405,217 +405,22 @@ def test_asof_join_split_equals_plain_random(spark):
         assert got == want, f"chunk={chunk}"
 
 
-def test_detect_hot_keys(spark):
-    from mlops_drift_detection_spark.operators.temporal import detect_hot_keys
-
-    df = spark.range(10_500).select(
-        F.when(F.col("id") < 10_000, F.lit("hot"))
-        .when(F.col("id") < 10_400, F.lit("warm"))
-        .otherwise(F.lit(None))
-        .alias("k")
-    )
-    assert detect_hot_keys(df, "k", hot_threshold=1_000) == ["hot"]
-    assert sorted(detect_hot_keys(df, "k", hot_threshold=200)) == ["hot", "warm"]
-    # NULL keys never reported hot even though 100 rows carry NULL
-    assert detect_hot_keys(df, "k", hot_threshold=50) != []
-    assert None not in detect_hot_keys(df, "k", hot_threshold=50)
-    # sampled estimate still finds the dominant key
-    assert detect_hot_keys(
-        df, "k", hot_threshold=1_000, sample_fraction=0.1
-    ) == ["hot"]
-
-
-def test_sessionize_auto_mixed_hot_and_normal_keys(spark):
-    """VERDICT r4 #6: auto dispatch routes the hot key through the split
-    path (>1 task for that key) while normal keys take the plain window —
-    output identical to plain sessionize for every row."""
-    from mlops_drift_detection_spark.operators.temporal import sessionize_auto
-
-    base = 1_600_000_000_000_000
-    hot = spark.range(30_000).select(
-        F.lit("hot").alias("k"),
-        F.timestamp_micros(
-            F.col("id") * 3_000_000
-            + F.floor(F.col("id") / 499) * 27_000_000
-            + base
-        ).alias("ts"),
-        F.col("id"),
-    )
-    cold = spark.range(200).select(
-        F.concat(F.lit("c"), (F.col("id") % 7).cast("string")).alias("k"),
-        F.timestamp_micros(F.col("id") * 11_000_000 + base).alias("ts"),
-        (F.col("id") + 1_000_000).alias("id"),
-    )
-    ev = hot.unionByName(cold)
-    auto = sessionize_auto(
-        ev, "k", "ts", gap_seconds=10, chunk_seconds=600, hot_threshold=5_000
-    )
-    plain = sessionize(ev, "k", "ts", gap_seconds=10)
-    mism = (
-        auto.select("id", F.col("session_id").alias("a"))
-        .join(plain.select("id", F.col("session_id").alias("b")), "id")
-        .where(F.col("a") != F.col("b"))
-        .count()
-    )
-    assert mism == 0
-    assert auto.count() == plain.count() == 30_200
-    # the hot branch's window shuffles on (k, __chunk): the split exchange
-    # must be present in the executed plan (plain sessionize has none)
-    plan = auto._jdf.queryExecution().executedPlan().toString()
-    assert any(
-        "hashpartitioning" in ln and "__chunk" in ln
-        for ln in plan.splitlines()
-    ), plan
-    # >1 task for the hot key's rows specifically (probe-only conf as in
-    # test_sessionize_split_identical_on_hot_key: coalescing + static
-    # broadcast both off, so the probe measures operator fanout)
-    keys = {
-        "spark.sql.adaptive.coalescePartitions.enabled": "false",
-        "spark.sql.autoBroadcastJoinThreshold": "-1",
-    }
-    prev = {k: spark.conf.get(k, "true") for k in keys}
-    for k, v in keys.items():
-        spark.conf.set(k, v)
-    try:
-        n_parts_hot = (
-            auto.where((F.col("k") == "hot") & (F.col("session_id") >= 0))
-            .select(F.spark_partition_id().alias("p"))
-            .distinct()
-            .count()
-        )
-    finally:
-        for k, v in prev.items():
-            spark.conf.set(k, v)
-    assert n_parts_hot > 1, n_parts_hot
-
-
-def test_sessionize_auto_no_hot_keys_is_plain_plan(spark):
-    from mlops_drift_detection_spark.operators.temporal import sessionize_auto
-
-    ev = spark.createDataFrame(
-        [(1, _ts(0)), (1, _ts(5)), (2, _ts(1))], "k long, ts timestamp"
-    )
-    auto = sessionize_auto(
-        ev, "k", "ts", gap_seconds=60, chunk_seconds=600, hot_threshold=100
-    )
-    plan = auto._jdf.queryExecution().executedPlan().toString()
-    assert "__chunk" not in plan  # plain single-window plan, no split branch
-    # key 1: events 5 min apart > 60 s gap -> sessions 0 and 1; key 2: 0
-    got = sorted(r["session_id"] for r in auto.collect())
-    assert got == [0, 0, 1]
-
-
-def test_asof_join_auto_mixed_keys(spark):
-    from mlops_drift_detection_spark.operators.temporal import asof_join_auto
-
-    base = 1_600_000_000_000_000
-    left_hot = spark.range(20_000).select(
-        F.lit("hot").alias("k"),
-        F.timestamp_micros(F.col("id") * 7_000_000 + base).alias("ts"),
-        F.col("id"),
-    )
-    left_cold = spark.range(300).select(
-        F.concat(F.lit("c"), (F.col("id") % 5).cast("string")).alias("k"),
-        F.timestamp_micros(F.col("id") * 9_000_000 + base).alias("ts"),
-        (F.col("id") + 1_000_000).alias("id"),
-    )
-    left = left_hot.unionByName(left_cold)
-    right = spark.range(100).select(
-        F.when(F.col("id") % 4 == 0, F.lit("c1"))
-        .otherwise(F.lit("hot"))
-        .alias("k"),
-        F.timestamp_micros(F.col("id") * 1_400_000_000 + base + 3_000_000).alias(
-            "rts"
-        ),
-        (F.col("id") * 10).cast("double").alias("v"),
-    )
-    plain = asof_join(
-        left, right, on="k", left_ts="ts", right_ts="rts", value_cols=["v"]
-    )
-    auto = asof_join_auto(
-        left, right, on="k", left_ts="ts", right_ts="rts", value_cols=["v"],
-        chunk_seconds=3600, hot_threshold=5_000,
-    )
-    mism = (
-        plain.select("id", F.col("v_asof").alias("a"))
-        .join(auto.select("id", F.col("v_asof").alias("b")), "id")
-        .where(
-            ~(
-                (F.col("a") == F.col("b"))
-                | (F.col("a").isNull() & F.col("b").isNull())
-            )
-        )
-        .count()
-    )
-    assert mism == 0
-    assert auto.count() == plain.count() == 20_300
-    plan = auto._jdf.queryExecution().executedPlan().toString()
-    assert any(
-        "hashpartitioning" in ln and "__chunk" in ln
-        for ln in plan.splitlines()
-    ), plan
-
-
-def test_interval_bucket_stats_flags_pathological_window(spark):
-    """Audit twin for interval_join bucketing (VERDICT r4 #8): a planted
-    pathological overlap window — one interval spanning the entire timeline
-    at a bucket size tuned for minute-scale intervals — must surface as
-    oversized buckets BEFORE the join, while a healthy workload audits
-    clean. Flagged candidate totals must equal the true equi-join load."""
-    from mlops_drift_detection_spark.operators.temporal import (
-        interval_bucket_stats,
-        interval_join,
-    )
+def test_interval_join_exact_on_pathological_window(spark):
+    """A pathological overlap window — one interval spanning the entire
+    timeline at a bucket size tuned for minute-scale intervals — explodes
+    into every bucket; the bucketed join must still return exactly the
+    theta-join result."""
+    from mlops_drift_detection_spark.operators.temporal import interval_join
 
     # 600 left events, one per second over 10 minutes
     left = spark.createDataFrame(
         [(i, _ts(i / 60.0)) for i in range(600)], "id long, ts timestamp"
     )
-    # healthy: 10 one-minute intervals, 60s buckets -> <=120 candidates/bucket
-    healthy = spark.createDataFrame(
-        [(j, _ts(j), _ts(j + 1)) for j in range(10)],
+    # 10 one-minute intervals plus one covering the whole 10-minute timeline
+    patho = spark.createDataFrame(
+        [(j, _ts(j), _ts(j + 1)) for j in range(10)] + [(99, _ts(0), _ts(10))],
         "iv long, start timestamp, end timestamp",
     )
-    assert (
-        interval_bucket_stats(
-            left, healthy, "ts", "start", "end", 60, max_candidates=200
-        ).count()
-        == 0
-    )
-
-    # pathological: one interval covering the whole 10-minute timeline
-    patho = healthy.union(
-        spark.createDataFrame(
-            [(99, _ts(0), _ts(10))], "iv long, start timestamp, end timestamp"
-        )
-    )
-    flagged = interval_bucket_stats(
-        left, patho, "ts", "start", "end", 60, max_candidates=100
-    ).collect()
-    assert len(flagged) == 10  # every bucket of the timeline is now hot
-    assert all(r["n_intervals"] >= 2 and r["candidates"] > 100 for r in flagged)
-
-    # audit's candidate accounting matches the join's real equi-join load:
-    # sum over ALL buckets (cap 0) == rows the bucket equi-join produces
-    total = sum(
-        r["candidates"]
-        for r in interval_bucket_stats(
-            left, patho, "ts", "start", "end", 60, max_candidates=0
-        ).collect()
-    )
-    b = 60 * 1_000_000
-    lb = left.withColumn("__b", F.floor(F.unix_micros("ts") / F.lit(b)))
-    rx = patho.withColumn(
-        "__b",
-        F.explode(
-            F.sequence(
-                F.floor(F.unix_micros("start") / F.lit(b)),
-                F.floor(F.unix_micros("end") / F.lit(b)),
-            )
-        ),
-    )
-    assert total == lb.join(rx, "__b").count()
-    # and the capped join itself still returns the exact theta-join result
     got = interval_join(left, patho, "ts", "start", "end", 60).count()
     want = left.join(
         patho, (F.col("ts") >= F.col("start")) & (F.col("ts") < F.col("end"))
